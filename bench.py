@@ -78,6 +78,21 @@ DRIFT_SECTION = [
 ]
 
 
+def clear_cache_blocking(spark) -> None:
+    """Drop the SQL cache and wait for its blocks to go. ``clearCache()``
+    unpersists without blocking, so block removal could overlap the next
+    timed region; the RDDs it released are unpersisted again with
+    ``blocking=True``, which returns once their blocks are removed. Other
+    persistent RDDs (live localCheckpoints) are left alone."""
+    jsc = spark.sparkContext._jsc
+    before = dict(jsc.getPersistentRDDs())
+    spark.catalog.clearCache()
+    after = jsc.getPersistentRDDs()
+    for rdd_id, rdd in before.items():
+        if rdd_id not in after:
+            rdd.unpersist(True)
+
+
 def main() -> None:
     spark = get_spark("bench")
     # warm the JVM/codegen path once with a trivial job
@@ -127,8 +142,9 @@ def main() -> None:
                 # best would measure a warm-cache query. Clearing between
                 # repetitions makes every repetition compute from parquet.
                 # Recorded numbers for such queries shift up once at r16;
-                # the timed action itself is character-identical.
-                spark.catalog.clearCache()
+                # the timed action itself is character-identical. The
+                # blocks are removed before t0, not during the timed region.
+                clear_cache_blocking(spark)
                 t0 = time.perf_counter()
                 df = spec.fn(spark, SF_DIR)
                 n = df.count()

@@ -7324,16 +7324,26 @@ def _drive_epochs(sink, slices) -> None:
     submit them concurrently — the later jobs' tasks back-fill executors
     freed by the earlier jobs' stragglers instead of serializing three
     scheduling tails. Spark's scheduler runs concurrent jobs FIFO, which
-    is exactly the back-fill behaviour wanted; job descriptions are
-    thread-local, so each epoch stays labeled. Inputs must be materialized
+    is exactly the back-fill behaviour wanted. Spark local properties (job
+    group, description, scheduler pool) are per thread and a pool thread
+    does not start with the caller's, so each epoch job first takes a copy:
+    the epochs stay labeled with the caller's job group and description
+    whether or not PYSPARK_PIN_THREAD is on. Inputs must be materialized
     (eager checkpoint / persisted) before the pool: concurrent FIRST
     computation of a shared lazy frame serializes on block locks. NOT for
     sinks whose epoch N reads state written by epochs < N (e.g. the
     incremental span-dedup corpus) — those stay sequential loops."""
     from concurrent.futures import ThreadPoolExecutor
 
+    jsc = slices[0].sparkSession.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties()
+
+    def run(epoch: int, batch) -> None:
+        jsc.setLocalProperties(props.clone())
+        sink(batch, epoch)
+
     with ThreadPoolExecutor(max_workers=len(slices)) as pool:
-        list(pool.map(lambda t: sink(t[1], t[0]), enumerate(slices)))
+        list(pool.map(run, range(len(slices)), slices))
 
 
 def _fold_state_dir(name: str, sf_dir: str) -> str:

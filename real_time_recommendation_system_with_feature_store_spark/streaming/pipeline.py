@@ -13,9 +13,11 @@ land in the right window.
 
 Local testing has no Kafka broker; ``replay_events_stream`` replays the
 driver's events parquet through a file stream so batch/stream parity is
-testable (tests/test_streaming.py). The kafka wiring is the same plan with a
-different source, gated behind import-try since the kafka connector jar may
-be absent.
+testable (tests/test_streaming.py). Like the Kafka source it sizes each
+micro-batch by what has arrived since the last trigger, up to one scan wave
+of bytes, so a lagging query drains a backlog in few batches. The kafka
+wiring is the same plan with a different source, gated behind import-try
+since the kafka connector jar may be absent.
 """
 
 from __future__ import annotations
@@ -62,11 +64,26 @@ def kafka_source(
 
 
 def replay_events_stream(spark: SparkSession, events_dir: str, schema: T.StructType) -> DataFrame:
-    """File-replay source: stream the events parquet as if it were arriving
-    (one file per micro-batch via maxFilesPerTrigger)."""
+    """File-replay source: stream the events parquet as if it were arriving.
+
+    Each trigger admits the files that arrived since the last one, up to one
+    full scan wave of bytes (``spark.sql.files.maxPartitionBytes`` ×
+    ``defaultParallelism`` of ``spark``) and always at least one file. So a
+    query that falls behind drains a backlog of small files in one or two
+    micro-batches instead of paying a batch's fixed cost (state commit,
+    sink push, epoch write) per file, while one trigger still cannot admit
+    an unbounded backlog. The windowed and fold sinks downstream give the
+    same results at any batch size; a consumer that needs one batch per
+    file builds its own source with ``maxFilesPerTrigger``."""
+    sc = spark.sparkContext
+    # the conf may hold a byte string ('128MB', '134217728b'): Spark's parser
+    partition_bytes = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
+    wave = partition_bytes * sc.defaultParallelism
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
+        .option("maxBytesPerTrigger", wave)
         .parquet(events_dir)
     )
 
@@ -208,9 +225,18 @@ def attribution_stream(
 
 def upsert_online_store(store, view_name: str):
     """ST8: foreachBatch sink — merge each micro-batch's latest rows into the
-    online feature table (keyed overwrite; Delta MERGE when available)."""
+    online feature table (keyed overwrite; Delta MERGE when available).
+
+    Update mode re-emits a window whenever a later batch changes it, so the
+    store log holds several rows per (key, window). When the view declares a
+    ``created_field`` that the batch does not carry, the epoch id is stamped
+    into it, and ``latest_snapshot`` / the as-of join pick the newest
+    emission."""
 
     def _upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        view = store.views.get(view_name)
+        if view and view.created_field and view.created_field not in batch_df.columns:
+            batch_df = batch_df.withColumn(view.created_field, F.lit(epoch_id).cast("long"))
         # store.push is EAGER (localCheckpoint snapshot inside): every
         # partition processes within foreachBatch (stateful queries fail
         # commit validation otherwise), the stored table detaches from the

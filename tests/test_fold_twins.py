@@ -63,3 +63,26 @@ def test_fold_twin_rerun_deterministic(spark):
     # silently change every pair emission.
     for name in ("ivm_delta_fold", "bm25_index_fold", "semantic_dedup_fold"):
         assert _rows(spark, name) == _rows(spark, name), name
+
+
+def test_drive_epochs_jobs_keep_caller_job_group(spark):
+    """The overlapped epoch jobs run on pool threads, which do not start
+    with the caller's local properties: each must still be submitted under
+    the caller's job group and description."""
+    from real_time_recommendation_system_with_feature_store_spark.queries import _drive_epochs
+
+    sc = spark.sparkContext
+    group = "drive-epochs-label-test"
+    seen = []
+
+    def sink(batch, epoch):
+        seen.append((epoch, sc.getLocalProperty("spark.job.description")))
+        batch.count()
+
+    sc.setJobGroup(group, "bench:drive_epochs")
+    try:
+        _drive_epochs(sink, [spark.range(10).where(F.col("id") % 3 == i) for i in range(3)])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sorted(seen) == [(i, "bench:drive_epochs") for i in range(3)]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3

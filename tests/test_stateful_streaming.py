@@ -175,7 +175,7 @@ def test_late_data_point_in_time_parity(spark):
 
     from real_time_recommendation_system_with_feature_store_spark.features.store import FeatureStore, FeatureView
     from real_time_recommendation_system_with_feature_store_spark.streaming.pipeline import (
-        replay_events_stream,
+        upsert_online_store,
         windowed_feature_stream,
     )
 
@@ -227,13 +227,11 @@ def test_late_data_point_in_time_parity(spark):
 
     stream_store = fresh_store()
 
-    def push_with_seq(batch_df, epoch_id):
-        # corrected re-emissions of a window share its window_end; the
-        # created_field tiebreak makes the as-of pick the newest push
-        stream_store.push("rt", batch_df.withColumn("__push_seq", F.lit(epoch_id)))
-
+    # one file per micro-batch: b2's hour-1 corrections must arrive in a
+    # later batch than b1 so those windows re-emit (the bounded replay
+    # source would admit b1-b3 as one batch)
     feats = windowed_feature_stream(
-        replay_events_stream(spark, stage, schema),
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage),
         key="user_id", window="1 hour", watermark="6 hours",
     )
     labels = spark.createDataFrame(
@@ -251,7 +249,10 @@ def test_late_data_point_in_time_parity(spark):
             )
         )
 
-    q = feats.writeStream.outputMode("update").foreachBatch(push_with_seq).start()
+    # corrected re-emissions of a window share its window_end; the sink
+    # stamps the epoch into the created_field, so the as-of picks the
+    # newest push
+    q = feats.writeStream.outputMode("update").foreachBatch(upsert_online_store(stream_store, "rt")).start()
     try:
         q.processAllAvailable()
         got = pit(stream_store)

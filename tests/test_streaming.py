@@ -28,14 +28,24 @@ def events_batch(spark):
     return load_tables(spark, SF_DIR, register=False)["events"]
 
 
-def test_stream_batch_parity(spark, events_batch, tmp_path_factory):
-    # stage the events as multiple files so the stream sees >1 micro-batch
+def _data_batches(q) -> int:
+    """Micro-batches of a query that read at least one row."""
+    return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+
+
+@pytest.mark.parametrize("per_file", [False, True], ids=["bounded", "per_file"])
+def test_stream_batch_parity(spark, events_batch, per_file):
+    # four staged files: the bounded replay source admits them in one
+    # micro-batch, the per-file source in four — parity must hold for both
     stage = os.path.join(TMP, "stream_stage")
     shutil.rmtree(stage, ignore_errors=True)
     events_batch.repartition(4).write.mode("overwrite").parquet(stage)
 
     schema = spark.read.parquet(stage).schema
-    stream = replay_events_stream(spark, stage, schema)
+    if per_file:
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    else:
+        stream = replay_events_stream(spark, stage, schema)
     assert stream.isStreaming
 
     agg_stream = windowed_feature_stream(stream, key="user_id", window="1 hour", watermark="365 days")
@@ -49,6 +59,7 @@ def test_stream_batch_parity(spark, events_batch, tmp_path_factory):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert _data_batches(q) == (4 if per_file else 1)
 
     got = spark.sql("SELECT * FROM parity_out")
     expected = windowed_feature_stream(events_batch, key="user_id", window="1 hour")
@@ -57,6 +68,113 @@ def test_stream_batch_parity(spark, events_batch, tmp_path_factory):
     e = sorted(map(str, expected.collect()))
     assert len(g) > 0
     assert g == e
+
+
+def _land_event_files(stage: str, n_files: int, events: int = 300) -> None:
+    """Land ``n_files`` event files the benchmark's way: file ``i`` holds
+    minute ``i``, a fifth of its events up to 3 min late (inside a 10 min
+    watermark), Zipf users, the item id in ``props``. Dwell values sit on a
+    1/8 grid, so any aggregation order sums them exactly. Modification
+    times increase with ``i``, which is the order the file source reads."""
+    import time
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(stage)
+    base = time.time() - 10 * n_files
+    for i in range(n_files):
+        rng = np.random.default_rng([11, i])
+        late = rng.uniform(0.0, 180.0, events) * (rng.random(events) < 0.2)
+        secs = np.maximum(60.0 * i + rng.uniform(0.0, 60.0, events) - late, 0.0)
+        frame = pd.DataFrame({
+            "ts": (pd.Timestamp("2024-01-01", tz="UTC") + pd.to_timedelta(secs, unit="s"))
+            .astype("datetime64[us, UTC]"),
+            "user_id": (rng.zipf(1.3, events) % 50).astype("int64"),
+            "event_type": rng.choice(["click", "view", "purchase"], events, p=[0.3, 0.6, 0.1]),
+            "value": rng.integers(0, 480, events) / 8.0,
+            "props": [f'{{"item_id": {k}}}' for k in rng.zipf(1.2, events) % 40],
+        })
+        path = os.path.join(stage, f"events-{i:03d}.parquet")
+        pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), path)
+        os.utime(path, (base + 10 * i, base + 10 * i))
+
+
+def _run_feature_queries(spark, source, out_dir):
+    """The benchmark's two queries over ``source()``: 5 min windowed user
+    features in update mode into a FeatureStore (epoch as the view's
+    created_field), and raw events folded into decayed item counts.
+    Returns (latest snapshot rows without the epoch, decayed counts by
+    item, data micro-batches per query)."""
+    from real_time_recommendation_system_with_feature_store_spark.features.store import FeatureStore, FeatureView
+    from real_time_recommendation_system_with_feature_store_spark.streaming.pipeline import (
+        decayed_count_stream,
+        read_decayed_counts,
+        upsert_online_store,
+    )
+
+    store = FeatureStore(spark=spark)
+    store.register(FeatureView(name="rt", entities=["user_id"], ttl_seconds=None,
+                               timestamp_field="window_end", created_field="epoch"))
+    state = os.path.join(out_dir, "trending")
+    feats = windowed_feature_stream(source(), key="user_id", window="5 minutes", watermark="10 minutes")
+    items = source().select("ts", F.get_json_object("props", "$.item_id").cast("long").alias("item_id"))
+    queries = [
+        feats.writeStream.outputMode("update").foreachBatch(upsert_online_store(store, "rt"))
+        .option("checkpointLocation", os.path.join(out_dir, "ckpt_feats")).start(),
+        items.writeStream.foreachBatch(decayed_count_stream(state, "item_id", "ts", "1 hours"))
+        .option("checkpointLocation", os.path.join(out_dir, "ckpt_items")).start(),
+    ]
+    try:
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    snap = sorted(tuple(r) for r in store.latest_snapshot("rt").drop("epoch").collect())
+    decayed = {r["key"]: r["decayed_count"]
+               for r in read_decayed_counts(spark, state, "2024-01-01 01:00:00", "1 hours").collect()}
+    return snap, decayed, [_data_batches(q) for q in queries]
+
+
+def test_replay_batch_size_invariance_and_admission_bound(spark, tmp_path):
+    """A backlog of event files through the benchmark's two queries: the
+    bounded replay source drains it in at most two micro-batches per query
+    and gives the same store snapshot and decayed counts as one batch per
+    file. With the scan wave (maxPartitionBytes x defaultParallelism) set
+    below one file's size, the backlog splits into one batch per file."""
+    n_files = 6
+    stage = str(tmp_path / "landing")
+    _land_event_files(stage, n_files)
+    schema = spark.read.parquet(stage).schema
+
+    def bounded():
+        return replay_events_stream(spark, stage, schema)
+
+    def per_file():
+        return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+
+    snap_b, decayed_b, batches_b = _run_feature_queries(spark, bounded, str(tmp_path / "bounded"))
+    snap_f, decayed_f, batches_f = _run_feature_queries(spark, per_file, str(tmp_path / "per_file"))
+    smallest = min(os.path.getsize(os.path.join(stage, f)) for f in os.listdir(stage))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    # a byte string, as the conf may hold one
+    spark.conf.set(key, f"{smallest // (2 * spark.sparkContext.defaultParallelism)}b")
+    try:
+        snap_s, decayed_s, batches_s = _run_feature_queries(spark, bounded, str(tmp_path / "small"))
+    finally:
+        spark.conf.set(key, old)
+
+    assert all(1 <= n <= 2 for n in batches_b), batches_b
+    assert batches_f == batches_s == [n_files, n_files]
+    assert snap_f and snap_b == snap_f == snap_s
+    for decayed in (decayed_b, decayed_s):
+        assert decayed.keys() == decayed_f.keys()
+        for k, v in decayed.items():
+            assert abs(v - decayed_f[k]) <= 1e-9 * abs(decayed_f[k]), k
 
 
 def test_kafka_json_decode_batch_analog(spark):
@@ -102,6 +220,32 @@ def test_online_store_upsert_roundtrip(spark):
     keys = spark.createDataFrame([(1,), (3,)], ["user_id"])
     online = {r["user_id"]: r["score"] for r in store.get_online_features("v", keys).collect()}
     assert online[1] == 99.0 and online[3] is None  # cold key -> null row
+
+
+def test_upsert_online_store_stamps_epoch_as_created_field(spark):
+    """Update mode re-emits a window in a later batch, so two pushes hold
+    the same (user_id, window_end). The sink stamps each batch's epoch into
+    the view's created_field and latest_snapshot returns the later epoch's
+    values; a batch that already carries the column is pushed as it is."""
+    from datetime import datetime
+
+    from real_time_recommendation_system_with_feature_store_spark.features.store import FeatureStore, FeatureView
+    from real_time_recommendation_system_with_feature_store_spark.streaming.pipeline import upsert_online_store
+
+    store = FeatureStore(spark=spark)
+    store.register(FeatureView(name="rt", entities=["user_id"], ttl_seconds=None,
+                               timestamp_field="window_end", created_field="epoch"))
+    sink = upsert_online_store(store, "rt")
+    end = datetime.fromisoformat("2024-01-01 10:05:00")
+    cols = ["user_id", "window_end", "clicks"]
+    sink(spark.createDataFrame([(1, end, 1), (2, end, 5)], cols), 7)
+    sink(spark.createDataFrame([(1, end, 3)], cols), 8)
+    snap = {r["user_id"]: (r["clicks"], r["epoch"]) for r in store.latest_snapshot("rt").collect()}
+    assert snap == {1: (3, 8), 2: (5, 7)}
+
+    sink(spark.createDataFrame([(2, end, 6, 100)], [*cols, "epoch"]), 9)
+    snap = {r["user_id"]: (r["clicks"], r["epoch"]) for r in store.latest_snapshot("rt").collect()}
+    assert snap == {1: (3, 8), 2: (6, 100)}
 
 
 def test_session_window_stream_matches_batch(spark):
