@@ -46,6 +46,76 @@ from pyspark.sql import functions as F
 
 from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
+# the extrema-contribution aliases of collapse_extrema_changes
+_EXTREMA_NAMES = ("imn", "imx", "dmn", "dmx", "nbad")
+
+
+def _reject_reserved(fn: str, cols: Sequence[str], reserved: Sequence[str]) -> None:
+    """Fail loudly up front when a caller's column is named like one of the
+    operator's output aliases: the collision would poison every downstream
+    reference with AMBIGUOUS_REFERENCE. Rename the column upstream."""
+    clash = sorted(set(reserved) & set(cols))
+    if clash:
+        raise ValueError(
+            f"{fn}: column(s) {clash} collide with the reserved names "
+            f"{sorted(set(reserved))} — rename upstream"
+        )
+
+
+def _op_sign(op: Column, fn: str) -> Column:
+    """+1 for an insert, -1 for a delete; any other op raises in-plan."""
+    return (
+        F.when(op == "I", F.lit(1))
+        .when(op == "D", F.lit(-1))
+        .otherwise(
+            F.raise_error(
+                F.concat(F.lit(f"{fn}: unknown op "), op.cast("string"))
+            ).cast("int")
+        )
+    )
+
+
+def _sum_aggs(
+    op: Column,
+    measure: Column,
+    count_col: str,
+    sum_col: str,
+    extra_measures: dict[str, Column] | None,
+) -> list[Column]:
+    """``agg_delta``'s (Δcount, Δsum, extras…) aggregates."""
+
+    # negate in DOUBLE (an exact sign flip), THEN cast to decimal: a
+    # decimal(28,10) × decimal(28,10) product would widen past Spark's
+    # 38-digit cap and round differently from other engines
+    def _signed(m: Column) -> Column:
+        return F.sum(F.when(op == "I", m).otherwise(-m).cast("decimal(28,10)"))
+
+    return [
+        F.sum(_op_sign(op, "agg_delta")).alias(count_col),
+        _signed(measure).alias(sum_col),
+        *[_signed(m).alias(name) for name, m in (extra_measures or {}).items()],
+    ]
+
+
+def _bad_row_count(op: Column, m: Column) -> Column:
+    """The number of rows with an unknown op or a NULL measure. when()
+    always evaluates its CONDITION, so bad rows are counted
+    unconditionally — a lazily-branched raise would never fire for rows no
+    branch selects (see apply_extrema_delta)."""
+    is_bad_row = ~(((op == "I") | (op == "D")) & m.isNotNull())
+    return F.sum(F.when(is_bad_row, F.lit(1)).otherwise(F.lit(0)))
+
+
+def _extrema_aggs(op: Column, m: Column) -> list[Column]:
+    """``collapse_extrema_changes``' (imn, imx, dmn, dmx, nbad) aggregates."""
+    return [
+        F.min(F.when(op == "I", m)).alias("imn"),
+        F.max(F.when(op == "I", m)).alias("imx"),
+        F.min(F.when(op == "D", m)).alias("dmn"),
+        F.max(F.when(op == "D", m)).alias("dmx"),
+        _bad_row_count(op, m).alias("nbad"),
+    ]
+
 
 def agg_delta(
     changes: DataFrame,
@@ -71,27 +141,8 @@ def agg_delta(
     view side must carry matching column names and
     ``apply_agg_delta(extra_sum_cols=...)`` merges them.
     """
-    op = qcol(op_col)
-    sign = (
-        F.when(op == "I", F.lit(1))
-        .when(op == "D", F.lit(-1))
-        .otherwise(
-            F.raise_error(
-                F.concat(F.lit("agg_delta: unknown op "), op.cast("string"))
-            ).cast("int")
-        )
-    )
-    # negate in DOUBLE (an exact sign flip), THEN cast to decimal: a
-    # decimal(28,10) × decimal(28,10) product would widen past Spark's
-    # 38-digit cap and round differently from other engines
-    def _signed(m: Column) -> Column:
-        return F.sum(F.when(op == "I", m).otherwise(-m).cast("decimal(28,10)"))
-
-    extras = extra_measures or {}
     return changes.groupBy(*[qcol(k) for k in keys]).agg(
-        F.sum(sign).alias(count_col),
-        _signed(measure).alias(sum_col),
-        *[_signed(m).alias(name) for name, m in extras.items()],
+        *_sum_aggs(qcol(op_col), measure, count_col, sum_col, extra_measures)
     )
 
 
@@ -121,41 +172,18 @@ def agg_extrema_delta(
     Loudness contract: unknown ops raise in-plan via the ``agg_delta``
     sign guard; (unknown op OR NULL measure) rows additionally count
     into ``nbad``, which ``apply_extrema_delta`` asserts on — the union
-    of the two source collapses' guards."""
-    reserved = {"imn", "imx", "dmn", "dmx", "nbad"}
-    clash = sorted(reserved & set(keys))
-    if clash:
-        raise ValueError(
-            f"agg_extrema_delta: key column(s) {clash} collide with the "
-            f"reserved contribution names {sorted(reserved)} — rename the "
-            "key upstream"
-        )
-    op = qcol(op_col)
-    sign = (
-        F.when(op == "I", F.lit(1))
-        .when(op == "D", F.lit(-1))
-        .otherwise(
-            F.raise_error(
-                F.concat(F.lit("agg_delta: unknown op "), op.cast("string"))
-            ).cast("int")
-        )
+    of the two source collapses' guards. The extrema names are reserved
+    for the keys, ``count_col``, ``sum_col`` and the extra measure names
+    alike."""
+    _reject_reserved(
+        "agg_extrema_delta",
+        [*keys, count_col, sum_col, *(extra_measures or {})],
+        _EXTREMA_NAMES,
     )
-
-    def _signed(m: Column) -> Column:
-        return F.sum(F.when(op == "I", m).otherwise(-m).cast("decimal(28,10)"))
-
-    m = measure
-    is_bad_row = ~(((op == "I") | (op == "D")) & m.isNotNull())
-    extras = extra_measures or {}
+    op = qcol(op_col)
     return changes.groupBy(*[qcol(k) for k in keys]).agg(
-        F.sum(sign).alias(count_col),
-        _signed(m).alias(sum_col),
-        *[_signed(x).alias(name) for name, x in extras.items()],
-        F.min(F.when(op == "I", m)).alias("imn"),
-        F.max(F.when(op == "I", m)).alias("imx"),
-        F.min(F.when(op == "D", m)).alias("dmn"),
-        F.max(F.when(op == "D", m)).alias("dmx"),
-        F.sum(F.when(is_bad_row, F.lit(1)).otherwise(F.lit(0))).alias("nbad"),
+        *_sum_aggs(op, measure, count_col, sum_col, extra_measures),
+        *_extrema_aggs(op, measure),
     )
 
 
@@ -264,26 +292,9 @@ def collapse_extrema_changes(
     them would collide with the aggregate aliases and poison every
     downstream reference with AMBIGUOUS_REFERENCE — fail loudly up front
     instead (rename the key upstream)."""
-    reserved = {"imn", "imx", "dmn", "dmx", "nbad"}
-    clash = sorted(reserved & set(keys))
-    if clash:
-        raise ValueError(
-            f"collapse_extrema_changes: key column(s) {clash} collide with "
-            f"the reserved contribution names {sorted(reserved)} — rename "
-            "the key upstream"
-        )
-    op = qcol(op_col)
-    m = qcol(measure_col)
-    # when() always evaluates its CONDITION, so count bad rows
-    # unconditionally — a lazily-branched raise would never fire for rows
-    # no branch selects (see apply_extrema_delta)
-    is_bad_row = ~(((op == "I") | (op == "D")) & m.isNotNull())
+    _reject_reserved("collapse_extrema_changes", keys, _EXTREMA_NAMES)
     return changes.groupBy(*[qcol(k) for k in keys]).agg(
-        F.min(F.when(op == "I", m)).alias("imn"),
-        F.max(F.when(op == "I", m)).alias("imx"),
-        F.min(F.when(op == "D", m)).alias("dmn"),
-        F.max(F.when(op == "D", m)).alias("dmx"),
-        F.sum(F.when(is_bad_row, F.lit(1)).otherwise(F.lit(0))).alias("nbad"),
+        *_extrema_aggs(qcol(op_col), qcol(measure_col))
     )
 
 
@@ -865,7 +876,7 @@ def build_distinct_support(
     Size shape: |support| = Σ per-group distinct values — bounded by the
     base but typically orders of magnitude smaller (it IS the thing the
     distinct count measures); one groupBy shuffle on (keys, value)."""
-    _check_distinct_names(keys, value_col, support_col)
+    _reject_reserved("distinct IVM", [*keys, value_col], [support_col])
     return (
         base.where(qcol(value_col).isNotNull())
         .groupBy(*[qcol(k) for k in keys], qcol(value_col))
@@ -915,20 +926,9 @@ def collapse_distinct_changes(
     silently with the NULL drop.
     ``dsupp`` is a RESERVED name: a key or value column named that would
     collide with the delta alias — fail up front."""
-    _check_distinct_names(keys, value_col, "dsupp")
+    _reject_reserved("distinct IVM", [*keys, value_col], ["dsupp"])
     op = qcol(op_col)
-    sign = (
-        F.when(op == "I", F.lit(1))
-        .when(op == "D", F.lit(-1))
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("collapse_distinct_changes: unknown op "),
-                    op.cast("string"),
-                )
-            ).cast("int")
-        )
-    )
+    sign = _op_sign(op, "collapse_distinct_changes")
     keep = F.coalesce(
         F.assert_true(
             (op == "I") | (op == "D"),
@@ -945,17 +945,6 @@ def collapse_distinct_changes(
         .agg(F.sum(sign).alias("dsupp"))
         .where(F.col("dsupp") != 0)
     )
-
-
-def _check_distinct_names(
-    keys: Sequence[str], value_col: str, *reserved: str
-) -> None:
-    clash = sorted(set(reserved) & ({value_col} | set(keys)))
-    if clash:
-        raise ValueError(
-            f"distinct IVM: column(s) {clash} collide with reserved "
-            f"names {sorted(set(reserved))} — rename upstream"
-        )
 
 
 def apply_distinct_delta(
@@ -1021,7 +1010,9 @@ def apply_distinct_delta(
     user, unique sessions) recompute from scratch per refresh; this is
     that computation's incremental form under CDC.
     """
-    _check_distinct_names(keys, value_col, "dsupp", support_col, distinct_col)
+    _reject_reserved(
+        "distinct IVM", [*keys, value_col], ["dsupp", support_col, distinct_col]
+    )
     kcols = list(keys)
     chg = changes if collapsed else collapse_distinct_changes(
         changes, kcols, value_col, op_col
@@ -1211,19 +1202,9 @@ def collapse_join_changes(
             "collapse_join_changes: input column '__net' is reserved"
         )
     cols = [c for c in delta_v.columns if c != op_col]
-    op = qcol(op_col)
-    sign = (
-        F.when(op == "I", F.lit(1))
-        .when(op == "D", F.lit(-1))
-        .otherwise(
-            F.raise_error(
-                F.concat(F.lit("collapse_join_changes: unknown op "), op.cast("string"))
-            ).cast("int")
-        )
-    )
     return (
         delta_v.groupBy(*[qcol(c) for c in cols])
-        .agg(F.sum(sign).alias("__net"))
+        .agg(F.sum(_op_sign(qcol(op_col), "collapse_join_changes")).alias("__net"))
         .where(F.col("__net") != 0)
     )
 

@@ -122,17 +122,16 @@ def chunk_documents(
         F.floor((n - max_tokens + step - 1) / F.lit(step)).cast("long") + 1
     )
     starts = F.sequence(F.lit(0).cast("long"), (n_chunks - 1) * step, F.lit(step).cast("long"))
-    # "at least one token" as a CHEAP scan-side predicate instead of
+    # "at least one token" as a CHEAP predicate instead of
     # where(size(tokens) > 0), which evaluated the whole tokenization tree
     # once in the Filter and again in the projection (the guide §4.4
-    # duplication, for a builtin tree). Exactly equivalent: tokens() trims
-    # first and trim strips every char <= 0x20 (a superset of the \\s+
-    # split class), so a non-empty trimmed string necessarily starts/ends
-    # with a non-\\s char and yields >= 1 non-empty token, while NULL /
-    # all-whitespace text trims to ""/NULL and yielded zero tokens. The
+    # duplication, for a builtin tree). Exactly equivalent: tokens() splits
+    # on the \\s+ class, so a text yields >= 1 non-empty token iff it holds
+    # a non-\\s character. (F.trim strips only spaces, so a trim-based gate
+    # let tab- or newline-only text through as one empty chunk.) The
     # IsNotNull half also pushes to the parquet scan (r15 verdict #2).
     rows = df.where(
-        qcol(text_col).isNotNull() & (F.trim(qcol(text_col)) != "")
+        qcol(text_col).isNotNull() & qcol(text_col).rlike("\\S")
     ).select(
         qcol(id_col),
         toks.alias("__toks"),

@@ -1,16 +1,21 @@
 """Scalable global ranking — the 100 TB path for total-order operations.
 
 ``Window.orderBy(...)`` with no partition key funnels every row through ONE
-task. Fine at test scale; a non-starter at 10^11 rows. ``global_row_number``
-produces the identical rank via range repartitioning:
+task. Fine at test scale; a non-starter at 10^11 rows.
+``global_exclusive_prefix_sum`` produces the identical running sum via range
+repartitioning, and ``global_row_number`` is its value-1 case:
 
   1. range-partition + sort by the ordering key (parallel sort),
-  2. per-partition row_number (no shuffle, partition-local),
-  3. add each partition's cumulative offset (tiny aggregate, broadcast).
+  2. partition-local exclusive running sum (no shuffle),
+  3. add each partition's cumulative carry (tiny aggregate, broadcast).
 
-The result is independent of where the range partitioner draws its sampled
-boundaries — the order is total, so offsets + local ranks always compose to
-the same global rank. Used by time_fraction_split for the scale path.
+Steps 2 and 3 must see the SAME partition assignment. The range exchange
+draws its boundaries from a fresh sample each time it runs, and the two
+steps prune different columns, so Spark plans them as two exchanges that
+may cut the keys at different places — offsets from one cut plus local
+ranks from the other give wrong and duplicated ranks. The partitioned frame
+is therefore cached and both steps read the one cached copy. Used by
+time_fraction_split for the scale path.
 """
 
 from __future__ import annotations
@@ -29,37 +34,12 @@ def global_row_number(
     rank_col: str = "rn",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    cols = [qcol(c) if isinstance(c, str) else c for c in order_by]
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-    with_pid = parted.withColumn("__pid", F.spark_partition_id())
-
-    # per-partition counts -> exclusive running offsets (tiny: one row/partition;
-    # num_partitions rows by construction, so a one-task window is the point —
-    # declare it with a NON-FOLDABLE constant partition key: Catalyst prunes
-    # a foldable lit(1) key, resurrecting the bare window and its WindowExec
-    # single-partition warning; spark_partition_id() is non-foldable and
-    # constant 0 after repartition(1))
-    sizes = with_pid.groupBy("__pid").agg(F.count("*").alias("__n")).repartition(1)
-    offsets = sizes.withColumn(
-        "__offset",
-        F.coalesce(
-            F.sum("__n").over(
-                Window.partitionBy(F.spark_partition_id())
-                .orderBy("__pid")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("__pid", "__offset")
-
-    local = Window.partitionBy("__pid").orderBy(*cols)
-    return (
-        with_pid.withColumn("__local", F.row_number().over(local))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(rank_col, (F.col("__offset") + F.col("__local")).cast("long"))
-        .drop("__pid", "__local", "__offset")
+    """1-based global rank in ``order_by`` order: the rows before a row,
+    plus one (``global_exclusive_prefix_sum`` over a constant 1)."""
+    ranked = global_exclusive_prefix_sum(
+        df.withColumn("__one", F.lit(1)), "__one", order_by, rank_col, num_partitions
     )
+    return ranked.withColumn(rank_col, qcol(rank_col) + 1).drop("__one")
 
 
 def global_exclusive_prefix_sum(
@@ -69,24 +49,26 @@ def global_exclusive_prefix_sum(
     out_col: str = "prefix_sum",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exclusive running sum of ``value_col`` in global ``order_by`` order —
-    the generalization of ``global_row_number`` (which is this with value 1):
-
-      1. range-partition + sort by the ordering key (parallel sort),
-      2. partition-local exclusive cumsum (no shuffle),
-      3. add each partition's cumulative value total (tiny aggregate,
-         broadcast) — the cross-partition carry.
+    """Exclusive running sum of ``value_col`` in global ``order_by`` order.
 
     Identical to ``sum(value) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING
     TO -1)`` on an unpartitioned window, without the one-task funnel. The
-    ordering must be total for determinism."""
+    ordering must be total for determinism.
+
+    The range-partitioned frame is cached (see the module docstring) and
+    stays cached until the session's cache is cleared
+    (``spark.catalog.clearCache()``)."""
     cols = [qcol(c) if isinstance(c, str) else c for c in order_by]
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parted = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-    with_pid = parted.withColumn("__pid", F.spark_partition_id())
+    with_pid = parted.withColumn("__pid", F.spark_partition_id()).persist()
 
-    # per-partition value totals -> exclusive running offsets (one row per
-    # partition; same non-foldable constant-key trick as global_row_number)
+    # per-partition value totals -> exclusive running offsets (tiny: one row
+    # per partition, so a one-task window is the point — declare it with a
+    # NON-FOLDABLE constant partition key: Catalyst prunes a foldable lit(1)
+    # key, resurrecting the bare window and its WindowExec single-partition
+    # warning; spark_partition_id() is non-foldable and constant 0 after
+    # repartition(1))
     sizes = (
         with_pid.groupBy("__pid")
         .agg(F.sum(qcol(value_col)).alias("__tot"))

@@ -18,11 +18,24 @@ micro-batch by what has arrived since the last trigger, up to one scan wave
 of bytes, so a lagging query drains a backlog in few batches. The kafka
 wiring is the same plan with a different source, gated behind import-try
 since the kafka connector jar may be absent.
+
+Every ST9 state sink keeps its state as epoch-partitioned parquet under
+one replay contract: a micro-batch overwrites its own ``epoch=N`` and a
+read folds every epoch. Only a few private helpers know that layout, and
+the sinks and folds go through them: ``_epoch_sink`` builds a sink's
+foreachBatch processor, ``_write_epoch_state`` lands a batch (or
+dead-letters it below a compaction floor), ``_read_epochs`` and
+``_read_epochs_or_none`` read the epochs back with the partition column
+dropped, and ``_drop_tombstoned`` / ``_live_rows`` apply the tombstone
+sets. The compaction, late-epoch and retrain protocols own their own
+directory moves.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -272,7 +285,7 @@ def near_dup_dedup_stream(
     replay of a partially-committed epoch rewrites exactly that epoch's
     output instead of duplicating pairs/bands (idempotent restarts).
     Readers consume each dir as one epoch-partitioned parquet dataset
-    (``.drop("epoch")``).
+    (``_read_epochs``).
 
     State lives in parquet (index_dir / docs_dir), not executor memory, so
     the stream restarts cleanly and the index doubles as the offline
@@ -284,39 +297,26 @@ def near_dup_dedup_stream(
         minhash_dedup_incremental,
     )
 
-    def _read_or_none(spark, path: str):
-        # FS-agnostic existence probe: a failed parquet read (missing path /
-        # no files yet) means "state not created", on local disk OR s3/hdfs —
-        # driver-local os.path would silently miss remote filesystems
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            return None
-
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col).persist()
         try:
             if batch.limit(1).count() == 0:
                 return
-            prior_docs = _read_or_none(spark, docs_dir)
-            prior_index = _read_or_none(spark, index_dir)
-            if prior_index is not None:
-                # exclude THIS epoch's partitions: under foreachBatch's
-                # at-least-once replay the epoch may have partially committed
-                # before the crash, and its own output must not feed its re-run
-                index = prior_index.where(F.col("epoch") != epoch_id).drop("epoch")
-                # prior_docs can lag prior_index: a crash between the index
+            # exclude THIS epoch's partitions: under foreachBatch's
+            # at-least-once replay the epoch may have partially committed
+            # before the crash, and its own output must not feed its re-run
+            prior = F.col("epoch") != epoch_id
+            prior_docs = _read_epochs_or_none(spark, docs_dir, prior)
+            index = _read_epochs_or_none(spark, index_dir, prior)
+            if index is not None:
+                # prior_docs can lag the index: a crash between the index
                 # write and the docs write leaves index epochs with no docs
                 # twin — replay must not fail permanently on that window
                 if prior_docs is None:
                     verify = batch
                 else:
-                    verify = (
-                        prior_docs.where(F.col("epoch") != epoch_id)
-                        .select(id_col, text_col)
-                        .unionByName(batch)
-                    )
+                    verify = prior_docs.select(id_col, text_col).unionByName(batch)
             else:
                 index = minhash_band_index(
                     batch.limit(0), text_col, id_col, n, num_hashes, bands, hash_fn
@@ -373,22 +373,14 @@ def span_dedup_stream(
         span_index,
     )
 
-    def _read_or_none(spark, path: str):
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            return None
-
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col).persist()
         try:
             if batch.limit(1).count() == 0:
                 return
-            prior = _read_or_none(spark, index_dir)
-            if prior is not None:
-                index = prior.where(F.col("epoch") != epoch_id).drop("epoch")
-            else:
+            index = _read_epochs_or_none(spark, index_dir, F.col("epoch") != epoch_id)
+            if index is None:
                 index = spark.createDataFrame([], "span_fp string")
             rewritten = dedup_spans_incremental(
                 batch, index, text_col, id_col, span_words=span_words, sep=sep
@@ -438,12 +430,6 @@ def semantic_dedup_stream(
     )
     from real_time_recommendation_system_with_feature_store_spark.operators.topk import global_topn_ranked
 
-    def _read_or_none(spark, path: str):
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            return None
-
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         it = batch_df.select(
@@ -452,7 +438,7 @@ def semantic_dedup_stream(
         try:
             if it.limit(1).count() == 0:
                 return
-            cents = _read_or_none(spark, centroids_dir)
+            cents = _read_epochs_or_none(spark, centroids_dir)
             if cents is None:
                 cents = global_topn_ranked(
                     it, [F.col("__iid").asc()], n_cells, rank_col="__cell"
@@ -461,9 +447,7 @@ def semantic_dedup_stream(
                 cents.write.mode("overwrite").parquet(centroids_dir)
                 cents = spark.read.parquet(centroids_dir)
             assigned = _assign_cells(it, cents)
-            prior = _read_or_none(spark, members_dir)
-            if prior is not None:
-                prior = prior.where(F.col("epoch") != epoch_id).drop("epoch")
+            prior = _read_epochs_or_none(spark, members_dir, F.col("epoch") != epoch_id)
             new = assigned.select("__cell", F.col("__iid").alias("id_b"), F.col("__iv").alias("__vb"))
             old_sides = [assigned.select("__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va"))]
             if prior is not None:
@@ -519,14 +503,13 @@ def cms_sketch_stream(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.sketches import cms_build
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _cells(batch_df: DataFrame) -> DataFrame:
         weight = qcol(weight_col).cast("long") if weight_col else None
-        cells = cms_build(
+        return cms_build(
             batch_df, qcol(key_col), depth=depth, width=width, salt=salt, weight=weight
         )
-        _write_epoch_state(cells, sketch_dir, epoch_id)
 
-    return _process
+    return _epoch_sink(sketch_dir, _cells)
 
 
 def read_cms_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
@@ -534,8 +517,7 @@ def read_cms_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     (the cms_merge of every epoch's cells). Feed the result straight to
     ``operators/sketches.cms_estimate`` or
     ``operators/profile.key_skew_from_cms``."""
-    cells = spark.read.parquet(sketch_dir).drop("epoch")
-    return cells.groupBy("row", "bucket").agg(
+    return _read_epochs(spark, sketch_dir).groupBy("row", "bucket").agg(
         F.sum("cell_count").alias("cell_count")
     )
 
@@ -563,18 +545,14 @@ def hll_sketch_stream(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.sketches import hll_build
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        regs = hll_build(batch_df, qcol(key_col), p=p, salt=salt)
-        _write_epoch_state(regs, sketch_dir, epoch_id)
-
-    return _process
+    return _epoch_sink(sketch_dir, lambda b: hll_build(b, qcol(key_col), p=p, salt=salt))
 
 
 def read_hll_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """Fold an epoch-partitioned register directory into ONE HLL register
     frame (the hll_merge of every epoch). Feed the result straight to
     ``operators/sketches.hll_estimate``."""
-    regs = spark.read.parquet(sketch_dir).drop("epoch")
+    regs = _read_epochs(spark, sketch_dir)
     return regs.groupBy("bucket").agg(F.max("max_rho").alias("max_rho"))
 
 
@@ -598,21 +576,17 @@ def qsketch_stream(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.sketches import qsketch_build
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = qsketch_build(
-            batch_df, qcol(value_col), sub_bits=sub_bits, scale=scale
-        )
-        _write_epoch_state(cells, sketch_dir, epoch_id)
-
-    return _process
+    return _epoch_sink(
+        sketch_dir,
+        lambda b: qsketch_build(b, qcol(value_col), sub_bits=sub_bits, scale=scale),
+    )
 
 
 def read_qsketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """Fold an epoch-partitioned quantile-sketch directory into ONE cell
     frame (the qsketch_merge of every epoch). Feed the result straight to
     ``operators/sketches.qsketch_quantiles``."""
-    cells = spark.read.parquet(sketch_dir).drop("epoch")
-    return cells.groupBy("__qs_msb", "__qs_sub").agg(
+    return _read_epochs(spark, sketch_dir).groupBy("__qs_msb", "__qs_sub").agg(
         F.sum("__qs_cnt").alias("__qs_cnt")
     )
 
@@ -653,7 +627,7 @@ def funnel_state_stream(
     if not steps:
         raise ValueError("funnel_state_stream: need at least one step")
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _state(batch_df: DataFrame) -> DataFrame:
         gcols = [qcol(c) for c in group_cols]
         # no ts-null filter: a row whose timestamps are all NULL still
         # records entity EXISTENCE (min() skips nulls and emits a null-ts
@@ -673,9 +647,9 @@ def funnel_state_stream(
             .dropDuplicates([*group_cols, type_col, ts_col])
             .select(*gcols, qcol(ts_col), qcol(type_col))
         )
-        _write_epoch_state(head.unionByName(tail), state_dir, epoch_id)
+        return head.unionByName(tail)
 
-    return _process
+    return _epoch_sink(state_dir, _state)
 
 
 def read_funnel_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -684,7 +658,7 @@ def read_funnel_state(spark: SparkSession, state_dir: str) -> DataFrame:
     ``funnel_summary`` with the same steps. No re-aggregation is needed —
     stage times are mins and entity counts are distinct groups, both
     insensitive to the cross-epoch duplicates the compaction leaves."""
-    return spark.read.parquet(state_dir).drop("epoch")
+    return _read_epochs(spark, state_dir)
 
 
 def cohort_state_stream(
@@ -707,15 +681,14 @@ def cohort_state_stream(
     entity-day, the natural size of a daily activity spine."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        pairs = (
+    def _pairs(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(qcol(entity_col), qcol(period_col))
             .where(qcol(period_col).isNotNull())
             .dropDuplicates([entity_col, period_col])
         )
-        _write_epoch_state(pairs, state_dir, epoch_id)
 
-    return _process
+    return _epoch_sink(state_dir, _pairs)
 
 
 def read_cohort_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -723,7 +696,7 @@ def read_cohort_state(spark: SparkSession, state_dir: str) -> DataFrame:
     frame; feed it straight to ``operators/cohort.cohort_retention``. No
     re-dedup is needed — the operator's per-entity collect_set absorbs
     cross-epoch duplicates."""
-    return spark.read.parquet(state_dir).drop("epoch")
+    return _read_epochs(spark, state_dir)
 
 
 def transition_state_stream(
@@ -793,25 +766,11 @@ def transition_state_stream(
     if not order_cols:
         raise ValueError("transition_state_stream: need at least one order col")
 
-    def _frontier(spark: SparkSession, epoch_id: int):
-        from pyspark.errors import AnalysisException
-
-        try:
-            # strictly-prior epochs only (partition-pruned): a REPLAYED
-            # epoch must see the same frontier it saw the first time, not
-            # its own previous partial write — otherwise the replay drops
-            # its whole batch as "already processed" and overwrites its
-            # pairs partition with nothing
-            last = (
-                spark.read.parquet(f"{state_dir}/last")
-                .where(F.col("epoch") < epoch_id)
-                .drop("epoch")
-            )
-        except AnalysisException:
-            return None
+    def _last_events(events: DataFrame) -> DataFrame:
+        # each entity's last event by the order key: its frontier
         ocols = [qcol(c) for c in order_cols]
         return (
-            last.groupBy(qcol(entity_col))
+            events.groupBy(qcol(entity_col))
             .agg(F.max(F.struct(*ocols, qcol(item_col))).alias("__fr"))
             .select(
                 qcol(entity_col),
@@ -838,7 +797,13 @@ def transition_state_stream(
         nn = nn.persist() if track_meta else nn
         null_dropped = (raw.count() - nn.count()) if track_meta else None
         ev = nn
-        seeds = _frontier(spark, epoch_id)
+        # strictly-prior epochs only (partition-pruned): a REPLAYED epoch
+        # must see the same frontier it saw the first time, not its own
+        # previous partial write — otherwise the replay drops its whole
+        # batch as "already processed" and overwrites its pairs partition
+        # with nothing
+        last = _read_epochs_or_none(spark, f"{state_dir}/last", F.col("epoch") < epoch_id)
+        seeds = None if last is None else _last_events(last)
         if seeds is not None:
             fr = seeds.select(
                 qcol(entity_col),
@@ -878,16 +843,7 @@ def transition_state_stream(
             .agg(F.count("*").alias("n"))
         )
         _write_epoch_state(pairs, f"{state_dir}/pairs", epoch_id)
-        new_last = (
-            ev.groupBy(qcol(entity_col))
-            .agg(F.max(F.struct(*ocols, qcol(item_col))).alias("__fr"))
-            .select(
-                qcol(entity_col),
-                *[F.col("__fr").getField(c).alias(c) for c in order_cols],
-                F.col("__fr").getField(item_col).alias(item_col),
-            )
-        )
-        _write_epoch_state(new_last, f"{state_dir}/last", epoch_id)
+        _write_epoch_state(_last_events(ev), f"{state_dir}/last", epoch_id)
         if track_meta:
             meta = spark.createDataFrame(
                 [(int(late_dropped), int(null_dropped))],
@@ -908,8 +864,7 @@ def read_transition_meta(spark: SparkSession, state_dir: str) -> DataFrame:
     their entity's frontier and were excluded from the transition counts
     (the documented watermark-style trade); ``null_dropped`` counts rows
     rejected by the non-null order-key contract."""
-    meta = spark.read.parquet(f"{state_dir}/meta").drop("epoch")
-    return meta.agg(
+    return _read_epochs(spark, f"{state_dir}/meta").agg(
         F.sum("late_dropped").alias("late_dropped"),
         F.sum("null_dropped").alias("null_dropped"),
     )
@@ -920,7 +875,7 @@ def read_transition_state(spark: SparkSession, state_dir: str) -> DataFrame:
     ``(prev_item, next_item, n)`` pair-count frame — the sum-fold over the
     per-epoch counts. Feed it to the same normalize-and-rank tail the
     batch ``item_transition_matrix`` entry uses (prob = n / row_total)."""
-    pairs = spark.read.parquet(f"{state_dir}/pairs").drop("epoch")
+    pairs = _read_epochs(spark, f"{state_dir}/pairs")
     return pairs.groupBy("prev_item", "next_item").agg(F.sum("n").alias("n"))
 
 
@@ -1012,15 +967,14 @@ def bm25_tombstone_stream(index_dir: str, id_col: str):
     for reuse)."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        ids = (
+    def _ids(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(qcol(id_col).isNotNull())
             .select(qcol(id_col).alias("doc_id"))
             .distinct()
         )
-        ids.write.mode("overwrite").parquet(f"{index_dir}/deletes/epoch={epoch_id}")
 
-    return _process
+    return _epoch_sink(f"{index_dir}/deletes", _ids)
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -1040,28 +994,20 @@ def read_bm25_index(spark: SparkSession, index_dir: str) -> tuple[DataFrame, Dat
     both frames; the tombstone set is usually tiny relative to the corpus,
     so the anti-joins broadcast."""
     postings = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .drop("epoch")
+        _read_epochs(spark, f"{index_dir}/postings")
         .groupBy("term", "doc_id")
         .agg(F.max("tf").alias("tf"))
     )
     doclen = (
-        spark.read.parquet(f"{index_dir}/doclen")
-        .drop("epoch")
+        _read_epochs(spark, f"{index_dir}/doclen")
         .groupBy("doc_id")
         .agg(F.max("dl").alias("dl"))
     )
-    if _hadoop_path_exists(spark, f"{index_dir}/deletes"):
-        from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
-
-        raw_dead = spark.read.parquet(f"{index_dir}/deletes")
-        # usually tiny relative to the corpus, but years of takedowns
-        # without a purge could outgrow the broadcast budget — stats-gate
-        # on the un-deduped scan (sane estimate) rather than force
-        dead = gated_broadcast(raw_dead.drop("epoch").distinct(), gate_df=raw_dead)
-        postings = postings.join(dead, "doc_id", "left_anti")
-        doclen = doclen.join(dead, "doc_id", "left_anti")
-    return postings, doclen
+    deletes = f"{index_dir}/deletes"
+    return (
+        _drop_tombstoned(spark, deletes, postings, "doc_id"),
+        _drop_tombstoned(spark, deletes, doclen, "doc_id"),
+    )
 
 
 def bm25_purge_tombstones(spark: SparkSession, index_dir: str) -> None:
@@ -1225,9 +1171,8 @@ def ivf_index_stream(
     cents = centroids.select("__cell", "__cv").localCheckpoint(eager=True)
     cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        frozen = spark.read.parquet(f"{index_dir}/centroids")
+    def _assigned(batch_df: DataFrame) -> DataFrame:
+        frozen = batch_df.sparkSession.read.parquet(f"{index_dir}/centroids")
         # null id/vector rows have no index position (same non-null-key
         # contract as the BM25/Markov sinks)
         it = batch_df.where(
@@ -1236,12 +1181,9 @@ def ivf_index_stream(
             qcol(id_col).alias("__iid"),
             l2_normalize(qcol(vec_col)).alias("__iv"),
         )
-        assigned = _assign_cells(it, frozen)
-        _write_epoch_state(
-            assigned, f"{index_dir}/cells", epoch_id, partition_by=["__cell"]
-        )
+        return _assign_cells(it, frozen)
 
-    return _process
+    return _epoch_sink(f"{index_dir}/cells", _assigned, partition_by=["__cell"])
 
 
 def ivf_search_from_index(
@@ -1286,13 +1228,8 @@ def ivf_search_from_index(
         rank_col="__prank",
     ).select("__qid", "__qv", "__cell")
     probed_cells = [r["__cell"] for r in probes.select("__cell").distinct().collect()]
-    cells = _apply_vector_tombstones(
-        spark,
-        index_dir,
-        spark.read.parquet(f"{index_dir}/cells")
-        .where(F.col("__cell").isin(probed_cells))
-        .drop("epoch")
-        .dropDuplicates(["__iid"]),
+    cells = _live_rows(
+        spark, index_dir, f"{index_dir}/cells", where=F.col("__cell").isin(probed_cells)
     )
     # probe-side broadcast is stats-gated on the query projection (the
     # probe frame is |Q|·n_probe rows — a bulk-inference query set can
@@ -1443,17 +1380,17 @@ def _route_late_epoch(
     collapsed: DataFrame,
     partition_by: list[str] | None = None,
 ) -> bool:
-    """Shared late-epoch dead-letter guard for the IVM delta sinks (the
-    uniform upgrade over the reference's ignore-late-data behavior, ST6):
-    a batch arriving for an epoch id AT OR BELOW the compacted floor must
-    not land under ``epoch=N`` — ``id == floor`` would overwrite the
-    compacted fold itself, ``id < floor`` would double-count at the next
-    fold (its original partition is gone, its contribution already lives
-    in the fold). Instead the collapsed frame is preserved under
-    ``.late/epoch=N`` (dot-prefixed: invisible to every
-    ``read_*_delta_state`` fold) and a per-epoch meta row records the
-    dropped row count, like the Markov sink's ``late_dropped``. Returns
-    True when the batch was dead-lettered.
+    """Late-epoch dead-letter guard of every state sink: it runs on each
+    ``_write_epoch_state`` call (the uniform upgrade over the reference's
+    ignore-late-data behavior, ST6). A batch arriving for an epoch id AT
+    OR BELOW the compacted floor must not land under ``epoch=N`` —
+    ``id == floor`` would overwrite the compacted fold itself, ``id <
+    floor`` would double-count at the next fold (its original partition
+    is gone, its contribution already lives in the fold). Instead the
+    collapsed frame is preserved under ``.late/epoch=N`` (dot-prefixed:
+    invisible to every ``read_*`` fold) and a per-epoch meta row records
+    the dropped row count, like the Markov sink's ``late_dropped``.
+    Returns True when the batch was dead-lettered.
 
     This also catches the fresh-checkpoint footgun: restarting a stream
     over compacted state with a NEW checkpoint restarts epoch ids at 0 —
@@ -1540,8 +1477,9 @@ def _write_epoch_state(
     stays correct on its own. Returns True when written, False when
     dead-lettered.
 
-    Not used by the tombstone sinks: their ``.deletes`` sets are
-    rmtree'd whole by purge (no surviving floor marker), and their
+    The tombstone sinks write through it too, but the guard never fires
+    there: purge and retrain remove their ``deletes``/``.deletes`` sets
+    whole, so no floor marker ever exists under them, and their
     protection remains the purge contract ("run past the committed
     offset")."""
     if _route_late_epoch(state_dir, epoch_id, df, partition_by=partition_by):
@@ -1553,8 +1491,96 @@ def _write_epoch_state(
     return True
 
 
+def _epoch_sink(
+    state_dir: str,
+    build: Callable[[DataFrame], DataFrame],
+    partition_by: list[str] | None = None,
+):
+    """The foreachBatch processor of a one-directory state sink: land
+    ``build(batch_df)`` under ``state_dir`` through ``_write_epoch_state``."""
+
+    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
+        _write_epoch_state(build(batch_df), state_dir, epoch_id, partition_by=partition_by)
+
+    return _sink
+
+
+def _read_epochs(
+    spark: SparkSession, state_dir: str, where: Column | None = None
+) -> DataFrame:
+    """Every epoch of a state directory as one frame, with the ``epoch``
+    partition column dropped. ``where`` applies before the drop, so a
+    predicate on a partition column (``epoch``, the IVF ``__cell``)
+    prunes the listing."""
+    df = spark.read.parquet(state_dir)
+    if where is not None:
+        df = df.where(where)
+    return df.drop("epoch")
+
+
+def _read_epochs_or_none(
+    spark: SparkSession, state_dir: str, where: Column | None = None
+) -> DataFrame | None:
+    """``_read_epochs``, or ``None`` while the directory holds no state.
+    A sink reading its own earlier state passes ``epoch != id`` or
+    ``epoch < id`` so that a replayed epoch never reads its own partial
+    write. A failed parquet read (missing path, no files yet) is the
+    existence probe: it works on local disk and on s3/hdfs alike, where
+    a driver-local os.path check would miss remote filesystems."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return _read_epochs(spark, state_dir, where)
+    except AnalysisException:
+        return None
+
+
+def _drop_tombstoned(
+    spark: SparkSession,
+    deletes_dir: str,
+    frame: DataFrame,
+    id_col: str = "__iid",
+    on: tuple[str, ...] = (),
+) -> DataFrame:
+    """Anti-join the tombstone set under ``deletes_dir`` (if any) out of
+    ``frame``. A row survives only while none of its ``on`` columns
+    (default: ``id_col`` itself) holds a tombstoned ``id_col``. The set is
+    usually tiny relative to the corpus, so the anti-join broadcasts. It
+    is stats-gated on the un-deduped scan (a sane estimate), so an
+    unpurged years-long takedown log falls back to a shuffled anti-join
+    instead of an OOM."""
+    if not _hadoop_path_exists(spark, deletes_dir):
+        return frame
+    from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
+
+    raw_dead = spark.read.parquet(deletes_dir)
+    dead = gated_broadcast(raw_dead.drop("epoch").distinct(), gate_df=raw_dead)
+    for c in on or (id_col,):
+        cond = id_col if c == id_col else F.col(c) == F.col(id_col)
+        frame = frame.join(dead, cond, "left_anti")
+    return frame
+
+
+def _live_rows(
+    spark: SparkSession,
+    index_dir: str,
+    rows_dir: str,
+    key: tuple[str, ...] = ("__iid",),
+    where: Column | None = None,
+) -> DataFrame:
+    """The live rows of an ANN index or of the semantic member table: every
+    epoch under ``rows_dir``, deduplicated on ``key`` (the fold that
+    absorbs redelivery under new epoch ids), minus the ids tombstoned
+    under ``index_dir/.deletes``."""
+    return _drop_tombstoned(
+        spark,
+        f"{index_dir}/.deletes",
+        _read_epochs(spark, rows_dir, where).dropDuplicates(list(key)),
+    )
+
+
 def read_late_epochs(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Per-epoch dead-letter meta for an IVM delta sink's state directory:
+    """Per-epoch dead-letter meta for a state sink's directory:
     one row (epoch, floor, late_rows) per dead-lettered batch — empty
     when nothing ever arrived late. The preserved frames themselves sit
     under ``.late/epoch=N`` in the sink's collapsed schema, replayable
@@ -1764,22 +1790,21 @@ def decayed_count_stream(
     non-UTC caller session would shift the sink-side anchor cast."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _sums(batch_df: DataFrame) -> DataFrame:
         # cast timestamp -> double keeps fractional (micro)seconds;
         # unix_timestamp would truncate to whole seconds
         exponent = (
             qcol(ts_col).cast("timestamp").cast("double")
             - F.lit(anchor).cast("timestamp").cast("double")
         ) / F.lit(float(_interval_seconds(half_life)))
-        w = (
+        return (
             batch_df.where(qcol(ts_col).isNotNull() & qcol(key_col).isNotNull())
             .select(qcol(key_col).alias("key"), F.pow(F.lit(2.0), exponent).alias("__w"))
             .groupBy("key")
             .agg(F.sum("__w").alias("w_sum"))
         )
-        _write_epoch_state(w, state_dir, epoch_id)
 
-    return _process
+    return _epoch_sink(state_dir, _sums)
 
 
 def _interval_seconds(interval: str) -> float:
@@ -1808,18 +1833,26 @@ def read_decayed_counts(
     """Fold the per-epoch numeraire sums and rescale to the decayed count
     as of ``at_ts``: ``(key, decayed_count)``. Pass the SAME half_life
     and anchor the sink was built with."""
+    return _decayed_fold(spark, state_dir, anchor, at_ts, half_life, "decayed_count")
+
+
+def _decayed_fold(
+    spark: SparkSession,
+    state_dir: str,
+    since: str,
+    until: str,
+    half_life: str,
+    out_col: str,
+) -> DataFrame:
+    """The per-key sum-fold of a decayed-count directory, rescaled by
+    ``2^(-(until - since)/hl)``: ``(key, out_col)``."""
     import math
 
-    folded = (
-        spark.read.parquet(state_dir)
-        .drop("epoch")
-        .groupBy("key")
-        .agg(F.sum("w_sum").alias("w_sum"))
-    )
+    folded = _read_epochs(spark, state_dir).groupBy("key").agg(F.sum("w_sum").alias("w_sum"))
     scale = math.pow(
-        2.0, -(_epoch_seconds(at_ts) - _epoch_seconds(anchor)) / _interval_seconds(half_life)
+        2.0, -(_epoch_seconds(until) - _epoch_seconds(since)) / _interval_seconds(half_life)
     )
-    return folded.select("key", (F.col("w_sum") * F.lit(scale)).alias("decayed_count"))
+    return folded.select("key", (F.col("w_sum") * F.lit(scale)).alias(out_col))
 
 
 def _epoch_seconds(s: str) -> float:
@@ -1856,30 +1889,20 @@ def rebase_decayed_counts(
     number of half-lives makes the rescale a power of two and the
     roundtrip bit-exact. Returns the epoch id the rebased state landed
     under."""
-    import math
-
-    scale = math.pow(
-        2.0,
-        -(_epoch_seconds(new_anchor) - _epoch_seconds(old_anchor))
-        / _interval_seconds(half_life),
+    return compact_epoch_state(
+        _decayed_fold(spark, state_dir, old_anchor, new_anchor, half_life, "w_sum"),
+        state_dir,
     )
-    folded = (
-        spark.read.parquet(state_dir)
-        .drop("epoch")
-        .groupBy("key")
-        .agg((F.sum("w_sum") * F.lit(scale)).alias("w_sum"))
-    )
-    return compact_epoch_state(folded, state_dir)
 
 
 def _reject_epoch_columns(sink: str, cols) -> None:
     """Shared name-collision guard for the IVM delta sinks: every sink
     writes its per-batch state under ``epoch=N`` partition directories and
-    every ``read_*_delta_state`` fold does ``drop("epoch")`` — a data
-    column literally named ``epoch`` would collide with the partition
-    scheme and be silently dropped/misread at the fold. Loud up front,
-    the same discipline as the ``__net``/``dsupp``/slot-name
-    reservations."""
+    every ``read_*_delta_state`` fold reads through ``_read_epochs``, which
+    drops the partition column — a data column literally named ``epoch``
+    would collide with the partition scheme and be silently dropped or
+    misread at the fold. Loud up front, the same discipline as the
+    ``__net``/``dsupp``/slot-name reservations."""
     if "epoch" in set(cols):
         raise ValueError(
             f"{sink}: a column named 'epoch' collides with the sink's "
@@ -1923,13 +1946,10 @@ def agg_delta_stream(
     )
     extras = {c: qcol(c) for c in (extra_measure_cols or [])}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = agg_delta(
-            batch_df, keys, qcol(measure_col), op_col=op_col, extra_measures=extras
-        )
-        _write_epoch_state(delta, state_dir, epoch_id)
-
-    return _process
+    return _epoch_sink(
+        state_dir,
+        lambda b: agg_delta(b, keys, qcol(measure_col), op_col=op_col, extra_measures=extras),
+    )
 
 
 def read_agg_delta_state(
@@ -1946,8 +1966,7 @@ def read_agg_delta_state(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
     return (
-        spark.read.parquet(state_dir)
-        .drop("epoch")
+        _read_epochs(spark, state_dir)
         .groupBy(*[qcol(k) for k in keys])
         .agg(
             F.sum("n").alias("n"),
@@ -1983,11 +2002,9 @@ def extrema_delta_stream(
 
     _reject_epoch_columns("extrema_delta_stream", keys)
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = collapse_extrema_changes(batch_df, keys, measure_col, op_col=op_col)
-        _write_epoch_state(delta, state_dir, epoch_id)
-
-    return _process
+    return _epoch_sink(
+        state_dir, lambda b: collapse_extrema_changes(b, keys, measure_col, op_col=op_col)
+    )
 
 
 def read_extrema_delta_state(
@@ -2001,8 +2018,7 @@ def read_extrema_delta_state(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
     return (
-        spark.read.parquet(state_dir)
-        .drop("epoch")
+        _read_epochs(spark, state_dir)
         .groupBy(*[qcol(k) for k in keys])
         .agg(
             F.min("imn").alias("imn"),
@@ -2042,11 +2058,9 @@ def distinct_delta_stream(
 
     _reject_epoch_columns("distinct_delta_stream", [*keys, value_col])
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = collapse_distinct_changes(batch_df, keys, value_col, op_col=op_col)
-        _write_epoch_state(delta, state_dir, epoch_id)
-
-    return _process
+    return _epoch_sink(
+        state_dir, lambda b: collapse_distinct_changes(b, keys, value_col, op_col=op_col)
+    )
 
 
 def read_distinct_delta_state(
@@ -2060,8 +2074,7 @@ def read_distinct_delta_state(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
     return (
-        spark.read.parquet(state_dir)
-        .drop("epoch")
+        _read_epochs(spark, state_dir)
         .groupBy(*[qcol(k) for k in keys], qcol(value_col))
         .agg(F.sum("dsupp").alias("dsupp"))
         .where(F.col("dsupp") != 0)
@@ -2086,14 +2099,13 @@ def join_delta_stream(state_dir: str, op_col: str = "op"):
     touched; the raw changelog is never rescanned."""
     from real_time_recommendation_system_with_feature_store_spark.operators.ivm import collapse_join_changes
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _nets(batch_df: DataFrame) -> DataFrame:
         # the view's columns are only known per-batch here (the factory
         # takes no schema), so the epoch-name guard runs on first contact
         _reject_epoch_columns("join_delta_stream", batch_df.columns)
-        delta = collapse_join_changes(batch_df, op_col=op_col)
-        _write_epoch_state(delta, state_dir, epoch_id)
+        return collapse_join_changes(batch_df, op_col=op_col)
 
-    return _process
+    return _epoch_sink(state_dir, _nets)
 
 
 def read_join_delta_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -2102,7 +2114,7 @@ def read_join_delta_state(spark: SparkSession, state_dir: str) -> DataFrame:
     against the materialized view. Exactly ``collapse_join_changes`` of
     the concatenated changelog (integer nets merge; cross-epoch
     cancellations drop at the fold)."""
-    df = spark.read.parquet(state_dir).drop("epoch")
+    df = _read_epochs(spark, state_dir)
     cols = [c for c in df.columns if c != "__net"]
     return (
         df.groupBy(*cols)
@@ -2139,32 +2151,28 @@ def topk_delta_stream(
     column named one of them would collide with the slot aliases, so the
     sink fails loudly up front (rename upstream)."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
+    from real_time_recommendation_system_with_feature_store_spark.operators.ivm import (
+        _bad_row_count,
+        _reject_reserved,
+    )
 
-    reserved = {"ni", "nd", "im", "dm", "nbad"}
-    clash = sorted(reserved & set([*keys, id_col]))
-    if clash:
-        raise ValueError(
-            f"topk_delta_stream: column(s) {clash} collide with the "
-            f"reserved slot names {sorted(reserved)} — rename upstream"
-        )
+    _reject_reserved(
+        "topk_delta_stream", [*keys, id_col], ("ni", "nd", "im", "dm", "nbad")
+    )
     _reject_epoch_columns("topk_delta_stream", [*keys, id_col, measure_col])
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _slots(batch_df: DataFrame) -> DataFrame:
         op = qcol(op_col)
         m = qcol(measure_col)
-        is_bad_row = ~(((op == "I") | (op == "D")) & m.isNotNull())
-        slots = batch_df.groupBy(
-            *[qcol(k) for k in keys], qcol(id_col)
-        ).agg(
+        return batch_df.groupBy(*[qcol(k) for k in keys], qcol(id_col)).agg(
             F.count(F.when(op == "I", F.lit(1))).alias("ni"),
             F.count(F.when(op == "D", F.lit(1))).alias("nd"),
             F.max(F.when(op == "I", m)).alias("im"),
             F.max(F.when(op == "D", m)).alias("dm"),
-            F.sum(F.when(is_bad_row, F.lit(1)).otherwise(F.lit(0))).alias("nbad"),
+            _bad_row_count(op, m).alias("nbad"),
         )
-        _write_epoch_state(slots, state_dir, epoch_id)
 
-    return _process
+    return _epoch_sink(state_dir, _slots)
 
 
 def read_topk_delta_state(
@@ -2342,32 +2350,14 @@ def vector_tombstone_stream(index_dir: str, id_col: str):
     ``purge_vector_tombstones`` first (physical drop + id release)."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        ids = (
+    def _ids(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(qcol(id_col).isNotNull())
             .select(qcol(id_col).alias("__iid"))
             .distinct()
         )
-        ids.write.mode("overwrite").parquet(f"{index_dir}/.deletes/epoch={epoch_id}")
 
-    return _process
-
-
-def _apply_vector_tombstones(
-    spark: SparkSession, index_dir: str, frame: DataFrame
-) -> DataFrame:
-    """Anti-join the index's tombstone fold (if any) out of a candidate
-    frame keyed by ``__iid``. The tombstone set is usually tiny relative
-    to the corpus, so the anti-join broadcasts — stats-gated (on the
-    un-deduped scan, a sanely-estimated bound) so an unpurged years-long
-    takedown log falls back to a shuffled anti-join instead of an OOM."""
-    if _hadoop_path_exists(spark, f"{index_dir}/.deletes"):
-        from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
-
-        raw_dead = spark.read.parquet(f"{index_dir}/.deletes")
-        dead = gated_broadcast(raw_dead.drop("epoch").distinct(), gate_df=raw_dead)
-        return frame.join(dead, "__iid", "left_anti")
-    return frame
+    return _epoch_sink(f"{index_dir}/.deletes", _ids)
 
 
 def purge_vector_tombstones(spark: SparkSession, index_dir: str) -> None:
@@ -2386,32 +2376,13 @@ def purge_vector_tombstones(spark: SparkSession, index_dir: str) -> None:
             "— nothing to purge (plain compaction is compact_epoch_state)"
         )
     if _hadoop_path_exists(spark, f"{index_dir}/cells"):
-        fold = _apply_vector_tombstones(
-            spark,
-            index_dir,
-            spark.read.parquet(f"{index_dir}/cells")
-            .drop("epoch")
-            .dropDuplicates(["__iid"]),
-        )
-        compact_epoch_state(fold, f"{index_dir}/cells", partition_by=["__cell"])
+        rows, key, partition_by = f"{index_dir}/cells", ("__iid",), ["__cell"]
     elif _hadoop_path_exists(spark, f"{index_dir}/codes"):
-        fold = _apply_vector_tombstones(
-            spark,
-            index_dir,
-            spark.read.parquet(f"{index_dir}/codes")
-            .drop("epoch")
-            .dropDuplicates(["__iid"]),
-        )
-        compact_epoch_state(fold, f"{index_dir}/codes")
+        rows, key, partition_by = f"{index_dir}/codes", ("__iid",), None
     else:
-        fold = _apply_vector_tombstones(
-            spark,
-            index_dir,
-            spark.read.parquet(index_dir)
-            .drop("epoch")
-            .dropDuplicates(["__iid", "__bucket"]),
-        )
-        compact_epoch_state(fold, index_dir)
+        rows, key, partition_by = index_dir, ("__iid", "__bucket"), None
+    fold = _live_rows(spark, index_dir, rows, key)
+    compact_epoch_state(fold, rows, partition_by=partition_by)
     _shutil.rmtree(f"{index_dir}/.deletes")
 
 
@@ -2474,14 +2445,7 @@ def retrain_vector_index(
         raise ValueError(
             f"retrain_vector_index: no cells/epoch partitions under {index_dir}"
         )
-    live = _apply_vector_tombstones(
-        spark,
-        index_dir,
-        spark.read.parquet(f"{index_dir}/cells")
-        .drop("epoch")
-        .dropDuplicates(["__iid"])
-        .select("__iid", "__iv"),
-    )
+    live = _live_rows(spark, index_dir, f"{index_dir}/cells").select("__iid", "__iv")
     cents = ivf_build_centroids(
         live, "__iid", "__iv", n_cells=n_cells, refine_iters=refine_iters,
         assume_unit=True,
@@ -2638,14 +2602,7 @@ def retrain_pq_index(
         raise ValueError(
             f"retrain_pq_index: no codes/epoch partitions under {index_dir}"
         )
-    live_ids = _apply_vector_tombstones(
-        spark,
-        index_dir,
-        spark.read.parquet(f"{index_dir}/codes")
-        .drop("epoch")
-        .dropDuplicates(["__iid"])
-        .select("__iid"),
-    )
+    live_ids = _live_rows(spark, index_dir, f"{index_dir}/codes").select("__iid")
     # ONE aggregation pass dedups the source AND detects duplicate ids
     # carrying DIFFERENT vectors (which would make the rebuild
     # nondeterministic — breaking the "rebuilt == fresh batch build,
@@ -2731,18 +2688,10 @@ def read_semantic_pairs(
     vector anchored — the semantic twin of the ANN searches' candidate
     filter. The tombstone fold is usually tiny, so the anti-joins
     broadcast (stats-gated on the un-deduped scan)."""
-    pairs = (
-        spark.read.parquet(pairs_dir)
-        .drop("epoch")
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = _read_epochs(spark, pairs_dir).dropDuplicates(["id_a", "id_b"])
+    pairs = _drop_tombstoned(
+        spark, f"{members_dir}/.deletes", pairs, on=("id_a", "id_b")
     )
-    if _hadoop_path_exists(spark, f"{members_dir}/.deletes"):
-        from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
-
-        raw_dead = spark.read.parquet(f"{members_dir}/.deletes")
-        dead = gated_broadcast(raw_dead.drop("epoch").distinct(), gate_df=raw_dead)
-        pairs = pairs.join(dead, F.col("id_a") == F.col("__iid"), "left_anti")
-        pairs = pairs.join(dead, F.col("id_b") == F.col("__iid"), "left_anti")
     return pairs.select("id_a", "id_b", "cosine")
 
 
@@ -2767,11 +2716,7 @@ def purge_semantic_tombstones(
             "is compact_epoch_state)"
         )
     live_pairs = read_semantic_pairs(spark, members_dir, pairs_dir)
-    members = _apply_vector_tombstones(
-        spark,
-        members_dir,
-        spark.read.parquet(members_dir).drop("epoch").dropDuplicates(["__iid"]),
-    )
+    members = _live_rows(spark, members_dir, members_dir)
     compact_epoch_state(live_pairs, pairs_dir)
     compact_epoch_state(members, members_dir)
     _shutil.rmtree(f"{members_dir}/.deletes")
@@ -2839,14 +2784,7 @@ def retrain_semantic_index(
             f"retrain_semantic_index: no member epoch partitions under "
             f"{members_dir}"
         )
-    live = _apply_vector_tombstones(
-        spark,
-        members_dir,
-        spark.read.parquet(members_dir)
-        .drop("epoch")
-        .dropDuplicates(["__iid"])
-        .select("__iid", "__iv"),
-    )
+    live = _live_rows(spark, members_dir, members_dir).select("__iid", "__iv")
     cents = global_topn_ranked(
         live, [F.col("__iid").asc()], n_cells, rank_col="__cell"
     ).select(
@@ -3003,14 +2941,13 @@ def lsh_index_stream(
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import _bucket_rows_arrow
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _rows(batch_df: DataFrame) -> DataFrame:
         src = batch_df.where(
             qcol(vec_col).isNotNull() & qcol(id_col).isNotNull()
         ).select(qcol(id_col).alias("__id"), qcol(vec_col).alias("__vec"))
-        rows = _bucket_rows_arrow(src, "__id", "__vec", "__iid", dim, n_planes, n_tables)
-        _write_epoch_state(rows, index_dir, epoch_id)
+        return _bucket_rows_arrow(src, "__id", "__vec", "__iid", dim, n_planes, n_tables)
 
-    return _process
+    return _epoch_sink(index_dir, _rows)
 
 
 def lsh_search_from_index(
@@ -3037,13 +2974,7 @@ def lsh_search_from_index(
     )
     from real_time_recommendation_system_with_feature_store_spark.operators.topk import topk_per_key
 
-    it = _apply_vector_tombstones(
-        spark,
-        index_dir,
-        spark.read.parquet(index_dir)
-        .drop("epoch")
-        .dropDuplicates(["__iid", "__bucket"]),
-    )
+    it = _live_rows(spark, index_dir, index_dir, ("__iid", "__bucket"))
     q = _bucket_rows_arrow(queries, query_id, query_vec, "__qid", dim, n_planes, n_tables)
     cand = (
         q.join(it, "__bucket")
@@ -3115,14 +3046,13 @@ def pq_index_stream(
         rows, "m int, code int, codeword array<double>"
     ).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def _codes(batch_df: DataFrame) -> DataFrame:
         src = batch_df.where(
             qcol(vec_col).isNotNull() & qcol(id_col).isNotNull()
         ).select(qcol(id_col).alias("__id"), qcol(vec_col).alias("__vec"))
-        encoded = _pq_encode(src, "__id", "__vec", books, dim, n_sub)
-        _write_epoch_state(encoded, f"{index_dir}/codes", epoch_id)
+        return _pq_encode(src, "__id", "__vec", books, dim, n_sub)
 
-    return _process
+    return _epoch_sink(f"{index_dir}/codes", _codes)
 
 
 def load_pq_codebooks(spark: SparkSession, index_dir: str):
@@ -3170,13 +3100,7 @@ def pq_search_from_index(
     from real_time_recommendation_system_with_feature_store_spark.operators.topk import topk_per_key
 
     books = load_pq_codebooks(spark, index_dir)
-    encoded = _apply_vector_tombstones(
-        spark,
-        index_dir,
-        spark.read.parquet(f"{index_dir}/codes")
-        .drop("epoch")
-        .dropDuplicates(["__iid"]),
-    )
+    encoded = _live_rows(spark, index_dir, f"{index_dir}/codes")
     qtab = _pq_query_tables(queries, query_id, query_vec, books, dim, n_sub)
     qdt = qtab.select("__qid", "__dt")
     score = _pq_adc_score_expr(n_sub, n_codes)

@@ -102,75 +102,3 @@ def session_depth_batch(events: DataFrame, gap_seconds: float = 1800.0) -> DataF
 
     return events.groupBy("user_id").applyInPandas(fold, OUTPUT_SCHEMA)
 
-
-# ---------------------------------------------------------------- transformWithState
-
-TWS_OUTPUT_SCHEMA = "user_id long, n_events long, total_value double, max_value double"
-
-
-def _running_totals_processor():
-    """Per-user running totals on Spark 4's transformWithStateInPandas — the
-    typed-state successor to applyInPandasWithState (ValueState survives
-    micro-batches in the RocksDB state store; no hand-rolled state tuple
-    threading). Same ST4 semantics as session_depth_stream, modern API.
-
-    EXPERIMENTAL: the transformWithState runtime needs protobuf (its Python
-    worker <-> state-server protocol), which this container lacks, so this
-    twin has never executed here (its test self-skips). The SUPPORTED
-    stateful surface is ``applyInPandasWithState`` (session_depth_stream
-    above) — runtime-verified by tests/test_stateful_streaming.py.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self._totals = handle.getValueState(
-                "totals", "n_events long, total_value double, max_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                n, tot, mx = self._totals.get()
-            else:
-                n, tot, mx = 0, 0.0, None
-            for pdf in rows:
-                n += len(pdf)
-                tot += float(pdf["value"].sum())
-                bmx = float(pdf["value"].max())
-                mx = bmx if mx is None else max(mx, bmx)
-            self._totals.update((n, tot, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [tot],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return RunningTotals()
-
-
-def user_running_totals_stream(events: DataFrame) -> DataFrame:
-    """Streaming per-user running (count, sum, max) of ``value``."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_running_totals_processor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def user_running_totals_batch(events: DataFrame) -> DataFrame:
-    """Batch twin: end-of-stream state equals this aggregate."""
-    from pyspark.sql import functions as F
-
-    return events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value").alias("total_value"),
-        F.max("value").alias("max_value"),
-    )

@@ -497,6 +497,22 @@ def test_agg_extrema_delta_matches_separate_collapses(spark):
         agg_extrema_delta(chg.withColumnRenamed("g", "imx"), ["imx"], m)
 
 
+def test_agg_extrema_delta_rejects_reserved_output_names(spark):
+    """The extrema aliases are reserved for every output name of the
+    combined collapse, not only the keys: a sum, count or extra measure
+    named like one would collide with the extrema column."""
+    from real_time_recommendation_system_with_feature_store_spark.operators.ivm import agg_extrema_delta
+
+    chg = spark.createDataFrame([("I", "a", 1.0)], "op string, g string, m double")
+    m = F.col("m")
+    with pytest.raises(ValueError, match="reserved"):
+        agg_extrema_delta(chg, ["g"], m, sum_col="imn")
+    with pytest.raises(ValueError, match="reserved"):
+        agg_extrema_delta(chg, ["g"], m, count_col="nbad")
+    with pytest.raises(ValueError, match="reserved"):
+        agg_extrema_delta(chg, ["g"], m, extra_measures={"dmx": m})
+
+
 # --- distinct-count IVM (support-count side table) ------------------------
 
 

@@ -689,6 +689,9 @@ def test_chunk_documents_golden(spark):
             (1, "a b c d e f g h"),   # n=8 -> chunks at 0 ([a..e]) and 3 ([d..h])
             (2, "x y"),               # n=2 <= max -> one whole chunk
             (3, "   "),               # no tokens -> no rows
+            (4, "\t\t"),              # tabs only -> no rows
+            (5, "\n"),                # newline only -> no rows
+            (6, " \t \n "),           # mixed whitespace -> no rows
         ],
         "doc_id int, text string",
     )

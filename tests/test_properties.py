@@ -672,6 +672,57 @@ def test_global_exclusive_prefix_sum_matches_window(spark, tokens, nparts):
     assert got == want
 
 
+@pytest.mark.parametrize("projection", ["pruned", "all_columns"])
+@pytest.mark.parametrize("num_partitions", [1, 2, 3, 4, 7, 32])
+def test_global_rank_functions_ignore_partitioning_and_projection(
+    spark, num_partitions, projection
+):
+    """Both range-partitioned rank functions must equal the unpartitioned
+    window for every partition count, whether the caller keeps every column
+    or prunes to two: the size aggregate and the local ranks must come from
+    one partition assignment (the all-columns collect used to give
+    duplicated ranks at local[4])."""
+    import os
+
+    from pyspark.sql import Window
+
+    from real_time_recommendation_system_with_feature_store_spark.operators.rank import (
+        global_exclusive_prefix_sum,
+        global_row_number,
+    )
+
+    sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+    o = spark.read.parquet(f"{sf}/orders.parquet")
+    keys = [F.col("o_orderdate"), F.col("o_orderkey")]
+    w = Window.orderBy(*keys)
+    want_rn = {
+        r["o_orderkey"]: r["rn"]
+        for r in o.select("o_orderkey", F.row_number().over(w).alias("rn")).collect()
+    }
+    want_ps = {
+        r["o_orderkey"]: r["ps"]
+        for r in o.select(
+            "o_orderkey",
+            F.coalesce(
+                F.sum("o_custkey").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+                F.lit(0),
+            ).alias("ps"),
+        ).collect()
+    }
+
+    def collect(df, col):
+        if projection == "pruned":
+            df = df.select("o_orderkey", col)
+        return {r["o_orderkey"]: r[col] for r in df.collect()}
+
+    rn = global_row_number(o, keys, "rn", num_partitions=num_partitions)
+    ps = global_exclusive_prefix_sum(
+        o, "o_custkey", keys, "ps", num_partitions=num_partitions
+    )
+    assert collect(rn, "rn") == want_rn
+    assert collect(ps, "ps") == want_ps
+
+
 @given(
     a=st.lists(st.one_of(st.none(), st.integers(min_value=-50, max_value=50)),
                min_size=1, max_size=25),

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
@@ -76,82 +77,6 @@ def test_session_depth_stream_matches_batch(spark):
     }
     assert got == expected
     assert len(got) > 0
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-import pytest  # noqa: E402
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (state-server protocol), "
-    "not installed in this container",
-)
-def test_transform_with_state_running_totals(spark):
-    """transformWithStateInPandas state accumulates across micro-batches and
-    the drained result equals the batch aggregate."""
-    from real_time_recommendation_system_with_feature_store_spark.session import load_tables
-    from real_time_recommendation_system_with_feature_store_spark.streaming.stateful import (
-        user_running_totals_batch,
-        user_running_totals_stream,
-    )
-
-    events = load_tables(spark, SF_DIR, register=False)["events"].select("user_id", "value")
-    stage = os.path.join(TMP, "tws_stage")
-    shutil.rmtree(stage, ignore_errors=True)
-    # two files -> at least two micro-batches with maxFilesPerTrigger=1
-    events.where(F.col("user_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-    events.where(F.col("user_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        schema = spark.read.parquet(stage).schema
-        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
-        out = user_running_totals_stream(stream)
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("tws_out")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(300), "stream did not drain in 300s"
-        finally:
-            q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    final = (
-        spark.sql("SELECT * FROM tws_out")
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "total_value", "max_value")).alias("s"))
-        .select("user_id", "s.n_events", "s.total_value", "s.max_value")
-    )
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6), r["max_value"])
-        for r in final.collect()
-    }
-    expected = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6), r["max_value"])
-        for r in user_running_totals_batch(events).collect()
-    }
-    assert got == expected and len(got) > 0
 
 
 @pytest.mark.heavy

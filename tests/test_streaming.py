@@ -3728,41 +3728,66 @@ def test_late_epoch_dead_letter_after_compaction(spark):
 
 
 def test_late_epoch_guard_uniform_across_all_ivm_sinks(spark):
-    """The same dead-letter guard protects every IVM delta sink — with a
-    compacted floor of 5 on an (otherwise empty) state dir, an epoch-3
-    batch is dead-lettered by each of the five sink flavors and nothing
-    lands under epoch=3."""
+    """The same dead-letter guard protects every single-directory state
+    sink, the five IVM flavors and the sketch, funnel, cohort, decayed and
+    ANN sinks alike — with a compacted floor of 5 on an (otherwise empty)
+    state dir, an epoch-3 batch is dead-lettered and nothing lands under
+    epoch=3. The IVF sink's dead letter keeps its ``__cell`` partitioning."""
     from real_time_recommendation_system_with_feature_store_spark.streaming.pipeline import (
         agg_delta_stream,
+        cohort_state_stream,
+        decayed_count_stream,
         distinct_delta_stream,
         extrema_delta_stream,
+        funnel_state_stream,
+        hll_sketch_stream,
+        ivf_index_stream,
         join_delta_stream,
+        qsketch_stream,
         read_late_epochs,
         topk_delta_stream,
     )
 
     chg = "op string, g string, id long, m double"
     batch = spark.createDataFrame([("I", "a", 1, 2.0)], chg)
+    events = spark.createDataFrame(
+        [("a", 1, "2024-01-02 00:00:00", "view", [1.0, 0.0])],
+        "g string, id long, ts string, event_type string, v array<double>",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "__cell int, __cv array<double>"
+    )
     sinks = {
-        "agg": lambda d: agg_delta_stream(d, ["g"], "m"),
-        "extrema": lambda d: extrema_delta_stream(d, ["g"], "m"),
-        "distinct": lambda d: distinct_delta_stream(d, ["g"], "id"),
-        "topk": lambda d: topk_delta_stream(d, ["g"], "id", "m"),
-        "join": lambda d: join_delta_stream(d),
+        "agg": (lambda d: agg_delta_stream(d, ["g"], "m"), batch, "."),
+        "extrema": (lambda d: extrema_delta_stream(d, ["g"], "m"), batch, "."),
+        "distinct": (lambda d: distinct_delta_stream(d, ["g"], "id"), batch, "."),
+        "topk": (lambda d: topk_delta_stream(d, ["g"], "id", "m"), batch, "."),
+        "join": (lambda d: join_delta_stream(d), batch, "."),
+        "hll": (lambda d: hll_sketch_stream(d, "g"), events, "."),
+        "qsketch": (lambda d: qsketch_stream(d, "id"), events, "."),
+        "funnel": (lambda d: funnel_state_stream(d, ["g"], ["view"]), events, "."),
+        "cohort": (lambda d: cohort_state_stream(d, "g", "ts"), events, "."),
+        "decayed": (lambda d: decayed_count_stream(d, "g", "ts"), events, "."),
+        "ivf": (lambda d: ivf_index_stream(d, "id", "v", cents), events, "cells"),
     }
-    for name, mk in sinks.items():
-        d = os.path.join(TMP, f"late_epoch_{name}")
-        shutil.rmtree(d, ignore_errors=True)
+    for name, (mk, rows, sub) in sinks.items():
+        root = os.path.join(TMP, f"late_epoch_{name}")
+        shutil.rmtree(root, ignore_errors=True)
+        d = os.path.normpath(os.path.join(root, sub))
         os.makedirs(d)
         with open(os.path.join(d, ".compacted.floor"), "w") as fh:
             fh.write("5")
-        mk(d)(batch, 3)
+        sink = mk(root)
+        sink(rows, 3)
         assert not os.path.exists(os.path.join(d, "epoch=3")), name
         assert os.path.exists(os.path.join(d, ".late", "epoch=3")), name
         meta = read_late_epochs(spark, d).collect()
         assert [(r["epoch"], r["floor"]) for r in meta] == [(3, 5)], name
+        if name == "ivf":
+            late = os.listdir(os.path.join(d, ".late", "epoch=3"))
+            assert any(p.startswith("__cell=") for p in late), late
         # and past the floor the same sink still writes normally
-        mk(d)(batch, 6)
+        sink(rows, 6)
         assert os.path.exists(os.path.join(d, "epoch=6")), name
 
 
