@@ -27,14 +27,20 @@ foreachBatch processor, ``_write_epoch_state`` lands a batch (or
 dead-letters it below a compaction floor), ``_read_epochs`` and
 ``_read_epochs_or_none`` read the epochs back with the partition column
 dropped, and ``_drop_tombstoned`` / ``_live_rows`` apply the tombstone
-sets. The compaction, late-epoch and retrain protocols own their own
-directory moves.
+sets. Every directory operation on state goes through ``_StateFs``, a
+small shim on Hadoop's ``FileSystem``, so the lifecycle holds on any
+Hadoop URI. Compaction, the three retrains and (through compaction) the
+tombstone purges finalize with one crash-safe protocol: ``_staged_swap``
+stages, commits by one rename and finishes; ``_recover_swap`` finishes or
+discards what a crash left.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -977,15 +983,6 @@ def bm25_tombstone_stream(index_dir: str, id_col: str):
     return _epoch_sink(f"{index_dir}/deletes", _ids)
 
 
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-portable existence check through the Hadoop FileSystem
-    API (works on local, hdfs://, s3a:// — unlike os.path)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
 def read_bm25_index(spark: SparkSession, index_dir: str) -> tuple[DataFrame, DataFrame]:
     """Fold an epoch-partitioned BM25 index into its two live frames:
     ``postings`` (term, doc_id, tf) and ``doclen`` (doc_id, dl). Max-folds
@@ -1015,18 +1012,42 @@ def bm25_purge_tombstones(spark: SparkSession, index_dir: str) -> None:
     live (tombstone-applied) folds, then drop the ``deletes/`` directory —
     after this, a tombstoned doc_id is reusable (re-indexing it is a
     fresh add). ``compact_epoch_state``'s contract applies verbatim:
-    stream stopped, no readers in flight, locally-mounted paths."""
-    import shutil as _shutil
+    stream stopped, no readers in flight. A purge interrupted by a crash
+    is finished by running it again (``_purge_tombstones``)."""
+    _purge_tombstones(
+        _StateFs(spark),
+        "bm25_purge_tombstones",
+        f"{index_dir}/deletes",
+        [
+            (lambda: read_bm25_index(spark, index_dir)[0], f"{index_dir}/postings", None),
+            (lambda: read_bm25_index(spark, index_dir)[1], f"{index_dir}/doclen", None),
+        ],
+    )
 
-    if not _hadoop_path_exists(spark, f"{index_dir}/deletes"):
+
+def _purge_tombstones(
+    fs: _StateFs,
+    who: str,
+    deletes_dir: str,
+    compactions: list[tuple[Callable[[], DataFrame], str, list[str] | None]],
+) -> None:
+    """The shape of every tombstone purge: compact each ``(fold, rows_dir,
+    partition_by)`` to its live fold, then drop the tombstone set. The
+    purge is its own recovery: an interrupted compaction of a rows
+    directory is finished first, and the live folds are built only after
+    that, so a purge cut by a crash at any step completes when run again
+    (its tombstones are dropped last)."""
+    if not fs.exists(deletes_dir):
         raise ValueError(
-            f"bm25_purge_tombstones: no tombstones under {index_dir}/deletes — "
-            "nothing to purge (plain compaction is compact_epoch_state)"
+            f"{who}: no tombstones under {deletes_dir} — nothing to purge "
+            "(plain compaction is compact_epoch_state)"
         )
-    postings, doclen = read_bm25_index(spark, index_dir)  # deletes applied
-    compact_epoch_state(postings, f"{index_dir}/postings")
-    compact_epoch_state(doclen, f"{index_dir}/doclen")
-    _shutil.rmtree(f"{index_dir}/deletes")
+    for _, rows_dir, _ in compactions:
+        _recover_swap(fs, _compact_swap(rows_dir))
+    folds = [(fold(), rows_dir, by) for fold, rows_dir, by in compactions]
+    for folded, rows_dir, by in folds:
+        compact_epoch_state(folded, rows_dir, partition_by=by)
+    fs.delete(deletes_dir)
 
 
 def bm25_score_from_index(
@@ -1254,6 +1275,237 @@ def ivf_search_from_index(
     )
 
 
+class _StateFs:
+    """The one door from the state lifecycle to storage: a few py4j calls
+    on ``org.apache.hadoop.fs.FileSystem``, resolved per path the way
+    Spark's own readers and writers resolve it, so every protocol below
+    holds on any Hadoop URI (a plain path, ``file://``, ``hdfs://``,
+    ``s3a://``). ``epoch_ids`` is the only parser of ``name=N`` entries.
+    The protocols take the session's filesystem from their caller's
+    session; the recovery calls, which take no session, use the active
+    one."""
+
+    _FLOOR = ".compacted.floor"
+
+    def __init__(self, spark: SparkSession | None = None) -> None:
+        self.spark = spark or SparkSession.active()
+        self._jvm = self.spark._jvm
+        self._conf = self.spark._jsc.hadoopConfiguration()
+
+    def _resolve(self, path: str):
+        p = self._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(self._conf), p
+
+    def _raw(self, path: str):
+        """The filesystem under any checksum layer: the floor marker is
+        read and written without a ``.crc`` sidecar, because a marker
+        written by hand next to a stale sidecar would fail verification."""
+        fs, p = self._resolve(path)
+        if is_instance_of(
+            self.spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"
+        ):
+            fs = fs.getRawFileSystem()
+        return fs, p
+
+    def exists(self, path: str) -> bool:
+        fs, p = self._resolve(path)
+        return bool(fs.exists(p))
+
+    def epoch_ids(self, path: str, prefix: str = "epoch") -> list[int]:
+        """The sorted ids N of the ``{prefix}=N`` entries directly under
+        ``path`` (none when ``path`` does not exist)."""
+        fs, p = self._resolve(path)
+        if not fs.exists(p):
+            return []
+        names = (str(st.getPath().getName()).rsplit("=", 1) for st in fs.listStatus(p))
+        return sorted(
+            int(n[1]) for n in names if len(n) == 2 and n[0] == prefix and n[1].isdigit()
+        )
+
+    def find_ready(self, root: str, kind: str) -> int | None:
+        """The target id of a ``.{kind}.ready.epoch=N`` directory under
+        ``root``, or ``None`` when no staged swap awaits its finish."""
+        ids = self.epoch_ids(root, f".{kind}.ready.epoch")
+        return ids[0] if ids else None
+
+    def rename(self, src: str, dst: str) -> None:
+        """Move ``src`` to the NEW path ``dst``. Hadoop's rename moves a
+        directory INSIDE an existing destination and reports success, so
+        an existing ``dst`` raises here; so does a rename the store
+        refuses."""
+        fs, s = self._resolve(src)
+        d = self._jvm.org.apache.hadoop.fs.Path(dst)
+        if fs.exists(d):
+            raise FileExistsError(f"rename {src} -> {dst}: destination exists")
+        if not fs.rename(s, d):
+            raise OSError(f"rename {src} -> {dst} failed")
+
+    def delete(self, path: str) -> None:
+        """Delete ``path`` recursively; a missing path is a no-op, a
+        delete the store refuses raises."""
+        fs, p = self._resolve(path)
+        if not fs.delete(p, True) and fs.exists(p):
+            raise OSError(f"delete {path} failed")
+
+    def read_floor(self, state_dir: str) -> int | None:
+        """The highest epoch id ever folded into a compaction of this
+        state directory (``None`` before the first one). Epoch ids at or
+        below the floor are FINALIZED: their partitions were deleted and
+        their contributions live only inside the compacted fold, so a
+        replay landing there would either overwrite the fold (id ==
+        floor) or double-count at the next fold (id < floor). One
+        ``exists`` per call while no marker exists: this runs on every
+        epoch write."""
+        marker = f"{state_dir}/{self._FLOOR}"
+        if not self.exists(marker):
+            return None
+        fs, p = self._raw(marker)
+        stream = fs.open(p)
+        try:
+            return int(bytes(stream.readAllBytes()).decode().strip())
+        finally:
+            stream.close()
+
+    def write_floor(self, state_dir: str, target: int) -> None:
+        """Raise the floor marker to ``target``; it never moves down, so
+        re-entering a finish rewrites it harmlessly."""
+        prev = self.read_floor(state_dir)
+        fs, marker = self._raw(f"{state_dir}/{self._FLOOR}")
+        tmp = self._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{self._FLOOR}.tmp")
+        out = fs.create(tmp, True)
+        try:
+            out.write(str(max(target, prev if prev is not None else target)).encode())
+        finally:
+            out.close()
+        # a POSIX rename(2) replaces the old marker atomically; a store
+        # whose rename refuses an existing file (HDFS) takes FileContext's
+        # OVERWRITE rename, which that store performs atomically (on a
+        # local path it would delete, then rename)
+        if not fs.rename(tmp, marker):
+            opt = getattr(self._jvm.org.apache.hadoop.fs, "Options$Rename")
+            opts = self.spark.sparkContext._gateway.new_array(opt, 1)
+            opts[0] = opt.OVERWRITE
+            fc = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri(), self._conf)
+            fc.rename(fs.makeQualified(tmp), fs.makeQualified(marker), opts)
+
+
+class _Swap(NamedTuple):
+    """The layout one finalize protocol swaps. Its staging dir is
+    ``root/.{kind}.tmp``, renamed to ``root/.{kind}.ready.epoch=N`` once
+    complete. ``rows`` pairs each epoch-partitioned live directory with
+    its staged subdirectory (``""``: the ready directory itself), which
+    lands as ``epoch=N``; ``models`` pairs each live directory replaced
+    whole with its staged subdirectory; ``clear`` lists the directories
+    the staged state already folded in (tombstone sets). ``who`` and
+    ``recover`` name the operation and its recovery call in errors."""
+
+    root: str
+    kind: str
+    rows: tuple[tuple[str, str], ...]
+    models: tuple[tuple[str, str], ...]
+    clear: tuple[str, ...]
+    who: str
+    recover: str
+
+
+def _staged_swap(fs: _StateFs, swap: _Swap, stage: Callable[[str], None]) -> int:
+    """Finalize a state layout crash-safely: refuse leftovers of an
+    interrupted run, take the target id (the max epoch of the rows
+    directories, so every FUTURE epoch stays monotone), let ``stage``
+    fully materialize the new state under the tmp path, commit it with
+    one rename to ``.{kind}.ready.epoch=<target>`` (the target id travels
+    in the name), then finish. A crash before the commit leaves a
+    discardable tmp; after it, the complete new state is in the ready
+    directory and ``_recover_swap`` re-enters the finish from any prefix.
+    Returns the target id."""
+    tmp = f"{swap.root}/.{swap.kind}.tmp"
+    if fs.find_ready(swap.root, swap.kind) is not None or fs.exists(tmp):
+        raise RuntimeError(
+            f"{swap.who}: leftover {swap.kind} state under {swap.root} from an "
+            f"interrupted run — call {swap.recover} first, then REBUILD any "
+            "fold from the recovered directory (a fold built over half-deleted "
+            "epochs would be partial)"
+        )
+    epochs = [e for live, _ in swap.rows for e in fs.epoch_ids(live)]
+    if not epochs:
+        raise ValueError(
+            f"{swap.who}: no epoch partitions under {' or '.join(d for d, _ in swap.rows)}"
+        )
+    target = max(epochs)
+    stage(tmp)
+    fs.rename(tmp, f"{swap.root}/.{swap.kind}.ready.epoch={target}")
+    _finish_swap(fs, swap, target)
+    return target
+
+
+def _finish_swap(fs: _StateFs, swap: _Swap, target: int) -> None:
+    """Move a committed swap into place. Idempotent by construction: each
+    step keys on what still exists under the ready directory, so recovery
+    can re-enter after a crash at any point. The swap finalizes row-epoch
+    history (old epochs deleted, everything under ``epoch=<target>``), so
+    each rows directory gets the late-epoch floor; the final floor write
+    is unconditional (max-fold) so that a re-entry still lands it."""
+    ready = f"{swap.root}/.{swap.kind}.ready.epoch={target}"
+    for live, sub in swap.models:
+        if fs.exists(f"{ready}/{sub}"):
+            fs.delete(live)
+            fs.rename(f"{ready}/{sub}", live)
+    for live, sub in swap.rows:
+        staged = f"{ready}/{sub}" if sub else ready
+        if not fs.exists(staged):
+            continue
+        if not sub:
+            # the rename below consumes the ready dir itself, leaving no
+            # ready dir for a recovery to re-enter, so the floor lands
+            # first: ids <= target are final from the commit on, whenever
+            # the epoch deletions land
+            fs.write_floor(live, target)
+        for e in fs.epoch_ids(live):
+            fs.delete(f"{live}/epoch={e}")
+        fs.rename(staged, f"{live}/epoch={target}")
+    for d in swap.clear:
+        fs.delete(d)
+    for live, _ in swap.rows:
+        fs.write_floor(live, target)
+    fs.delete(ready)
+
+
+def _recover_swap(fs: _StateFs, swap: _Swap) -> bool:
+    """Finish a committed swap or discard an uncommitted one (see
+    ``_staged_swap``). The run-recovery-FIRST ordering is enforced: an
+    epoch NEWER than the ready target means a sink wrote past the crash
+    before recovery ran, and finishing would delete it — that raises
+    instead. Returns True when it changed anything."""
+    changed = False
+    target = fs.find_ready(swap.root, swap.kind)
+    if target is not None:
+        newer = sorted(e for live, _ in swap.rows for e in fs.epoch_ids(live) if e > target)
+        if newer:
+            raise RuntimeError(
+                f"{swap.recover}: epochs {newer} under "
+                f"{' or '.join(d for d, _ in swap.rows)} are NEWER than the "
+                f"interrupted {swap.kind}'s target epoch={target} — a sink "
+                "wrote past the crash before recovery ran, and the staged "
+                "state never folded them. Finishing would delete them; move "
+                "them aside deliberately, or discard the ready dir and run "
+                f"the {swap.kind} again."
+            )
+        _finish_swap(fs, swap, target)
+        changed = True
+    tmp = f"{swap.root}/.{swap.kind}.tmp"
+    if fs.exists(tmp):
+        fs.delete(tmp)
+        changed = True
+    return changed
+
+
+def _compact_swap(state_dir: str) -> _Swap:
+    return _Swap(
+        state_dir, "compact", ((state_dir, ""),), (), (),
+        "compact_epoch_state", "recover_epoch_state(state_dir)",
+    )
+
+
 def compact_epoch_state(
     folded: DataFrame,
     state_dir: str,
@@ -1281,97 +1533,30 @@ def compact_epoch_state(
     This is the standard log-compaction trade; the per-epoch partitions
     exist precisely so the operator chooses when to pay it.
 
-    Locally-mounted POSIX paths only: the listing/delete/rename run
-    through Python glob/shutil/os, which never touch an ``hdfs://`` or
-    ``s3://`` URI (against one the glob finds nothing and this raises
-    "no epoch partitions" — safe, but unsupported). Remote-filesystem
-    deployments should rewrite to a fresh prefix with the engine's own
-    writers (or route through the Hadoop FileSystem API) instead.
-
-    Crash safety (every window covered, none silent): the fold fully
-    materializes into ``.compact.tmp``, is renamed to
-    ``.compact.ready.epoch=<id>`` (the target id travels in the name),
-    and only THEN are source epochs deleted and the ready dir renamed
-    into place. A crash before the ready-rename leaves a discardable
-    tmp; a crash after it leaves a complete fold plus possibly-partial
-    epochs — ``recover_epoch_state`` finishes either case, and THIS
-    function refuses to run while leftovers exist (compacting over a
-    half-deleted directory would silently fold partial state: the
-    caller's ``folded`` frame must be rebuilt AFTER recovery). Returns
-    the epoch id the compacted state landed under."""
-    import glob as _glob
-    import os as _os
-
-    tmp = f"{state_dir}/.compact.tmp"
-    if _glob.glob(f"{state_dir}/.compact.ready.epoch=*") or _os.path.exists(tmp):
-        raise RuntimeError(
-            f"compact_epoch_state: leftover compaction state under {state_dir} "
-            "from an interrupted run — call recover_epoch_state(state_dir) "
-            "first, then REBUILD the fold from the recovered directory "
-            "(a fold built over half-deleted epochs would be partial)"
-        )
-    epochs = sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{state_dir}/epoch=*")
-        if p.rsplit("=", 1)[1].isdigit()
-    )
-    if not epochs:
-        raise ValueError(f"compact_epoch_state: no epoch partitions under {state_dir}")
+    Crash safety (every window covered, none silent) is ``_staged_swap``'s:
+    the fold materializes into ``.compact.tmp``, is renamed to
+    ``.compact.ready.epoch=<id>``, and the compacted floor lands before
+    any source epoch is deleted. A crash before the ready-rename leaves a
+    discardable tmp; a crash after it leaves a complete fold plus
+    possibly-partial epochs — ``recover_epoch_state`` finishes either
+    case, and THIS function refuses to run while leftovers exist
+    (compacting over a half-deleted directory would silently fold partial
+    state: the caller's ``folded`` frame must be rebuilt AFTER recovery).
+    Returns the epoch id the compacted state landed under."""
     writer = folded.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    ready = f"{state_dir}/.compact.ready.epoch={epochs[-1]}"
-    _os.rename(tmp, ready)
-    # the floor lands the moment the compaction is committed (the ready
-    # rename), not only at the end of _finish_compaction: a crash between
-    # the final epoch=<target> rename and a tail-positioned floor write
-    # would leave compacted state unguarded with no ready dir left for
-    # recovery to re-enter. Setting it early is conservative-correct —
-    # ids <= target are final from here on no matter when the epoch
-    # deletions land. (_finish_compaction re-writes it; max-idempotent.)
-    _write_compacted_floor(state_dir, epochs[-1])
-    _finish_compaction(state_dir, ready, epochs[-1])
-    return epochs[-1]
+    return _staged_swap(_StateFs(folded.sparkSession), _compact_swap(state_dir), writer.parquet)
 
 
-def _finish_compaction(state_dir: str, ready: str, target: int) -> None:
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    for p in _glob.glob(f"{state_dir}/epoch=*"):
-        if p.rsplit("=", 1)[1].isdigit():
-            _shutil.rmtree(p)
-    _os.rename(ready, f"{state_dir}/epoch={target}")
-    _write_compacted_floor(state_dir, target)
-
-
+# the floor marker's module-level spellings, kept for callers that hold no
+# _StateFs (the lifecycle tests stage crash windows through them)
 def _compacted_floor(state_dir: str) -> int | None:
-    """The highest epoch id ever folded into a compaction of this state
-    directory (``None`` before the first compaction). Epoch ids at or
-    below the floor are FINALIZED: their partitions were deleted and
-    their contributions live only inside the compacted fold, so a replay
-    landing there would either overwrite the fold (id == floor) or
-    double-count at the next fold (id < floor)."""
-    import os as _os
-
-    marker = f"{state_dir}/.compacted.floor"
-    if not _os.path.exists(marker):
-        return None
-    with open(marker) as fh:
-        return int(fh.read().strip())
+    return _StateFs().read_floor(state_dir)
 
 
 def _write_compacted_floor(state_dir: str, target: int) -> None:
-    import os as _os
-
-    marker = f"{state_dir}/.compacted.floor"
-    prev = _compacted_floor(state_dir)
-    tmp = f"{marker}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(max(target, prev if prev is not None else target)))
-    _os.replace(tmp, marker)
+    _StateFs().write_floor(state_dir, target)
 
 
 def _route_late_epoch(
@@ -1398,12 +1583,6 @@ def _route_late_epoch(
     ids. They now land in the dead letter, loud in ``read_late_epochs``;
     recover by restarting with the original checkpoint (the supported
     contract) or by replaying the dead-lettered frames under fresh ids.
-
-    Locally-mounted POSIX paths only, the same caveat as
-    ``compact_epoch_state`` (the floor marker goes through plain
-    open()/os): against a remote URI the marker is never found, the
-    guard is inert, and behavior degrades to the pre-guard replay
-    contract — safe, but unguarded.
 
     An epoch-id replay ABOVE the floor keeps the sinks' normal replay
     contract (overwrite-own-partition); the floor only finalizes what
@@ -1434,16 +1613,13 @@ def _route_late_epoch(
     id < floor (originals below the floor only survive mid-crash), or
     the ``.compact.ready`` marker is still present (the rename that
     retires originals hasn't happened yet)."""
-    import glob as _glob
-    import os as _os
-
-    floor = _compacted_floor(state_dir)
+    spark = collapsed.sparkSession
+    fs = _StateFs(spark)
+    floor = fs.read_floor(state_dir)
     if floor is None or epoch_id > floor:
         return False
-    spark = collapsed.sparkSession
-    orig_existed = _os.path.isdir(f"{state_dir}/epoch={epoch_id}") and (
-        epoch_id < floor
-        or bool(_glob.glob(f"{state_dir}/.compact.ready.epoch=*"))
+    orig_existed = fs.exists(f"{state_dir}/epoch={epoch_id}") and (
+        epoch_id < floor or fs.find_ready(state_dir, "compact") is not None
     )
     w = collapsed.write.mode("overwrite")
     if partition_by:
@@ -1549,7 +1725,7 @@ def _drop_tombstoned(
     is stats-gated on the un-deduped scan (a sane estimate), so an
     unpurged years-long takedown log falls back to a shuffled anti-join
     instead of an OOM."""
-    if not _hadoop_path_exists(spark, deletes_dir):
+    if not _StateFs(spark).exists(deletes_dir):
         return frame
     from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
 
@@ -1590,9 +1766,7 @@ def read_late_epochs(spark: SparkSession, state_dir: str) -> DataFrame:
     dead-lettered, so its content is (or will be, via recovery) already
     inside the compacted fold; ``replay_late_epochs`` refuses those by
     default. NULL for meta written before the flag existed."""
-    import glob as _glob
-
-    if not _glob.glob(f"{state_dir}/.late_meta/epoch=*"):
+    if not _StateFs(spark).epoch_ids(f"{state_dir}/.late_meta"):
         return spark.createDataFrame(
             [], "epoch long, floor long, late_rows long, orig_existed boolean"
         )
@@ -1604,23 +1778,6 @@ def read_late_epochs(spark: SparkSession, state_dir: str) -> DataFrame:
     return meta.select(
         F.col("epoch").cast("long"), "floor", "late_rows", "orig_existed"
     )
-
-
-def _late_meta_orig_existed(state_dir: str, epoch_id: int) -> bool | None:
-    """The ``orig_existed`` flag from one dead-lettered epoch's meta row,
-    read Spark-free via pyarrow (replay is a pure-POSIX path). ``None``
-    when the meta is missing or predates the flag."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    for f in sorted(
-        _glob.glob(f"{state_dir}/.late_meta/epoch={epoch_id}/*.parquet")
-    ):
-        tbl = _pq.read_table(f)
-        if "orig_existed" in tbl.column_names and tbl.num_rows > 0:
-            return bool(tbl.column("orig_existed")[0].as_py())
-    return None
 
 
 def replay_late_epochs(
@@ -1656,41 +1813,28 @@ def replay_late_epochs(
     checkpoint afterwards, or its next epoch id may collide). Returns the
     new epoch ids, empty when no dead letter exists (or only refused
     duplicates remain)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    lates = sorted(
-        (
-            int(p.rsplit("=", 1)[1])
-            for p in _glob.glob(f"{state_dir}/.late/epoch=*")
-            if p.rsplit("=", 1)[1].isdigit()
-        )
-    )
+    spark = SparkSession.active()
+    fs = _StateFs(spark)
+    lates = fs.epoch_ids(f"{state_dir}/.late")
+    if lates and not include_duplicates:
+        dups = {
+            r["epoch"]
+            for r in read_late_epochs(spark, state_dir).where("orig_existed").collect()
+        }
+        lates = [k for k in lates if k not in dups]
     if not lates:
         return []
-    if not include_duplicates:
-        lates = [k for k in lates if _late_meta_orig_existed(state_dir, k) is not True]
-        if not lates:
-            return []
-    existing = [
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{state_dir}/epoch=*")
-        if p.rsplit("=", 1)[1].isdigit()
-    ]
-    floor = _compacted_floor(state_dir)
-    nxt = max([*existing, floor if floor is not None else -1]) + 1
+    floor = fs.read_floor(state_dir)
+    nxt = max([*fs.epoch_ids(state_dir), floor if floor is not None else -1]) + 1
     new_ids = []
     for k in lates:
-        _os.rename(f"{state_dir}/.late/epoch={k}", f"{state_dir}/epoch={nxt}")
-        _shutil.rmtree(f"{state_dir}/.late_meta/epoch={k}", ignore_errors=True)
+        fs.rename(f"{state_dir}/.late/epoch={k}", f"{state_dir}/epoch={nxt}")
+        fs.delete(f"{state_dir}/.late_meta/epoch={k}")
         new_ids.append(nxt)
         nxt += 1
-    for d in (".late", ".late_meta"):
-        try:
-            _os.rmdir(f"{state_dir}/{d}")
-        except OSError:
-            pass
+    for d in (f"{state_dir}/.late", f"{state_dir}/.late_meta"):
+        if not fs.epoch_ids(d):
+            fs.delete(d)
     return new_ids
 
 
@@ -1708,42 +1852,14 @@ def recover_epoch_state(state_dir: str) -> bool:
       source epochs are all intact; discard the partial tmp.
 
     Returns True when it changed anything, False on a clean directory.
-    Same stopped-stream / no-readers / local-path contract as
-    ``compact_epoch_state``. The run-recovery-FIRST ordering is enforced,
-    not just documented: if any epoch id NEWER than the ready fold's
+    Same stopped-stream / no-readers contract as ``compact_epoch_state``.
+    The run-recovery-FIRST ordering is enforced, not just documented: if
+    any epoch id NEWER than the ready fold's
     target exists (a sink was restarted over the crashed directory before
     recovery ran), finishing would delete post-crash epochs — that raises
     instead of silently destroying data; resolve by folding the newer
     epochs into a fresh compaction or moving them aside deliberately."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    changed = False
-    ready_dirs = _glob.glob(f"{state_dir}/.compact.ready.epoch=*")
-    if ready_dirs:
-        ready = ready_dirs[0]
-        target = int(ready.rsplit("=", 1)[1])
-        newer = sorted(
-            int(p.rsplit("=", 1)[1])
-            for p in _glob.glob(f"{state_dir}/epoch=*")
-            if p.rsplit("=", 1)[1].isdigit() and int(p.rsplit("=", 1)[1]) > target
-        )
-        if newer:
-            raise RuntimeError(
-                f"recover_epoch_state: epochs {newer} under {state_dir} are "
-                f"NEWER than the interrupted compaction's target epoch="
-                f"{target} — a sink wrote past the crash before recovery "
-                "ran. Finishing would delete those epochs; fold them into "
-                "a fresh compaction (or move them aside) instead."
-            )
-        _finish_compaction(state_dir, ready, target)
-        changed = True
-    tmp = f"{state_dir}/.compact.tmp"
-    if _os.path.exists(tmp):
-        _shutil.rmtree(tmp)
-        changed = True
-    return changed
+    return _recover_swap(_StateFs(), _compact_swap(state_dir))
 
 
 def decayed_count_stream(
@@ -2366,24 +2482,21 @@ def purge_vector_tombstones(spark: SparkSession, index_dir: str) -> None:
     after this a tombstoned id is reusable. The layout is auto-detected
     (``cells/`` = IVF, re-partitioned by ``__cell``; ``codes/`` = PQ;
     otherwise the LSH root-level epochs). ``compact_epoch_state``'s
-    contract applies verbatim: stream stopped, no readers in flight,
-    locally-mounted paths."""
-    import shutil as _shutil
-
-    if not _hadoop_path_exists(spark, f"{index_dir}/.deletes"):
-        raise ValueError(
-            f"purge_vector_tombstones: no tombstones under {index_dir}/.deletes "
-            "— nothing to purge (plain compaction is compact_epoch_state)"
-        )
-    if _hadoop_path_exists(spark, f"{index_dir}/cells"):
+    contract applies verbatim: stream stopped, no readers in flight. A
+    purge interrupted by a crash is finished by running it again."""
+    fs = _StateFs(spark)
+    if fs.exists(f"{index_dir}/cells"):
         rows, key, partition_by = f"{index_dir}/cells", ("__iid",), ["__cell"]
-    elif _hadoop_path_exists(spark, f"{index_dir}/codes"):
+    elif fs.exists(f"{index_dir}/codes"):
         rows, key, partition_by = f"{index_dir}/codes", ("__iid",), None
     else:
         rows, key, partition_by = index_dir, ("__iid", "__bucket"), None
-    fold = _live_rows(spark, index_dir, rows, key)
-    compact_epoch_state(fold, rows, partition_by=partition_by)
-    _shutil.rmtree(f"{index_dir}/.deletes")
+    _purge_tombstones(
+        fs,
+        "purge_vector_tombstones",
+        f"{index_dir}/.deletes",
+        [(lambda: _live_rows(spark, index_dir, rows, key), rows, partition_by)],
+    )
 
 
 def retrain_vector_index(
@@ -2405,94 +2518,59 @@ def retrain_vector_index(
        re-normalizing would perturb the last ulp), so
        **rebuilt ≡ fresh batch build over the live corpus, bit-exact**;
     3. re-assign every stored vector to its new cell;
-    4. swap atomically via the ``.compact.ready`` discipline: the new
-       centroids AND re-assigned cells fully materialize under
-       ``.retrain.tmp``, one rename marks them ``.retrain.ready.epoch=N``
-       (N = the max folded epoch id, so future sink epochs stay
-       monotone), and only then does ``_finish_retrain`` replace the old
-       state. A crash before the ready-rename leaves a discardable tmp; a
-       crash during the finish leaves the complete new state in the ready
-       dir — ``recover_vector_index`` resumes idempotently from any
-       prefix. Tombstones are folded in at step 1, so ``.deletes/`` is
-       cleared in the finish (ids released, same as a purge).
+    4. swap atomically via ``_staged_swap``: the new centroids AND
+       re-assigned cells fully materialize under ``.retrain.tmp``, one
+       rename marks them ``.retrain.ready.epoch=N`` (N = the max folded
+       epoch id, so future sink epochs stay monotone), and only then is
+       the old state replaced. A crash before the ready-rename leaves a
+       discardable tmp; a crash during the finish leaves the complete new
+       state in the ready dir — ``recover_vector_index`` resumes
+       idempotently from any prefix. Tombstones are folded in at step 1,
+       so ``.deletes/`` is cleared in the finish (ids released, same as a
+       purge).
 
     Future ``ivf_index_stream`` batches read ``centroids/`` per batch, so
     adds AFTER the swap assign against the refreshed geometry — run with
     the stream stopped and no readers in flight (``compact_epoch_state``'s
-    contract, verbatim; same locally-mounted-path scope). Returns the
-    epoch id the rebuilt cells landed under."""
-    import glob as _glob
-    import os as _os
-
+    contract, verbatim). Returns the epoch id the rebuilt cells landed
+    under."""
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
         _assign_cells,
         ivf_build_centroids,
     )
 
-    tmp = f"{index_dir}/.retrain.tmp"
-    if _glob.glob(f"{index_dir}/.retrain.ready.epoch=*") or _os.path.exists(tmp):
-        raise RuntimeError(
-            f"retrain_vector_index: leftover retrain state under {index_dir} "
-            "from an interrupted run — call recover_vector_index(index_dir) "
-            "first"
+    def stage(tmp: str) -> None:
+        live = _live_rows(spark, index_dir, f"{index_dir}/cells").select("__iid", "__iv")
+        cents = ivf_build_centroids(
+            live, "__iid", "__iv", n_cells=n_cells, refine_iters=refine_iters,
+            assume_unit=True,
+        ).localCheckpoint(eager=True)  # n_cells rows; the Lloyd subtree would
+        # otherwise re-execute for the centroids write AND the re-assign pass
+        cents.write.mode("overwrite").parquet(f"{tmp}/centroids")
+        _assign_cells(live, cents).write.mode("overwrite").partitionBy("__cell").parquet(
+            f"{tmp}/cells"
         )
-    epochs = sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{index_dir}/cells/epoch=*")
-        if p.rsplit("=", 1)[1].isdigit()
-    )
-    if not epochs:
-        raise ValueError(
-            f"retrain_vector_index: no cells/epoch partitions under {index_dir}"
-        )
-    live = _live_rows(spark, index_dir, f"{index_dir}/cells").select("__iid", "__iv")
-    cents = ivf_build_centroids(
-        live, "__iid", "__iv", n_cells=n_cells, refine_iters=refine_iters,
-        assume_unit=True,
-    ).localCheckpoint(eager=True)  # n_cells rows; the Lloyd subtree would
-    # otherwise re-execute for the centroids write AND the re-assign pass
-    reassigned = _assign_cells(live, cents)
-    cents.write.mode("overwrite").parquet(f"{tmp}/centroids")
-    reassigned.write.mode("overwrite").partitionBy("__cell").parquet(f"{tmp}/cells")
-    ready = f"{index_dir}/.retrain.ready.epoch={epochs[-1]}"
-    _os.rename(tmp, ready)
-    _finish_retrain(index_dir, ready, epochs[-1])
-    return epochs[-1]
+
+    return _staged_swap(_StateFs(spark), _index_swap(index_dir), stage)
 
 
-def _finish_retrain(
+def _index_swap(
     index_dir: str,
-    ready: str,
-    target: int,
     model_dir: str = "centroids",
     rows_dir: str = "cells",
-) -> None:
-    """Move the staged retrain into place. Idempotent by construction —
-    each step keys on what still exists under the ready dir, so recovery
-    can re-enter after a crash at any point. ``model_dir``/``rows_dir``
-    name the frozen-model and epoch-rooted row layouts (IVF:
-    centroids/cells, PQ: codebooks/codes)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    if _os.path.exists(f"{ready}/{model_dir}"):
-        _shutil.rmtree(f"{index_dir}/{model_dir}", ignore_errors=True)
-        _os.rename(f"{ready}/{model_dir}", f"{index_dir}/{model_dir}")
-    if _os.path.exists(f"{ready}/{rows_dir}"):
-        for p in _glob.glob(f"{index_dir}/{rows_dir}/epoch=*"):
-            if p.rsplit("=", 1)[1].isdigit():
-                _shutil.rmtree(p)
-        _os.rename(f"{ready}/{rows_dir}", f"{index_dir}/{rows_dir}/epoch={target}")
-    if _os.path.exists(f"{index_dir}/.deletes"):
-        _shutil.rmtree(f"{index_dir}/.deletes")
-    # retrain finalizes row-epoch history exactly like compaction (old
-    # epochs deleted, everything lives under epoch=target), so the rows
-    # dir gets the same late-epoch floor; written UNCONDITIONALLY (max
-    # fold, idempotent) so a crash between the rows rename and here still
-    # lands the floor on recovery re-entry
-    _write_compacted_floor(f"{index_dir}/{rows_dir}", target)
-    _shutil.rmtree(ready, ignore_errors=True)
+    who: str = "retrain_vector_index",
+    recover: str = "recover_vector_index(index_dir)",
+) -> _Swap:
+    """The retrain layout of an ANN index: the frozen model and the
+    epoch-rooted rows (IVF: centroids/cells, PQ: codebooks/codes). The
+    staged rebuild folded the tombstones in, so ``.deletes`` clears."""
+    return _Swap(
+        index_dir, "retrain",
+        ((f"{index_dir}/{rows_dir}", rows_dir),),
+        ((f"{index_dir}/{model_dir}", model_dir),),
+        (f"{index_dir}/.deletes",),
+        who, recover,
+    )
 
 
 def recover_vector_index(
@@ -2507,40 +2585,10 @@ def recover_vector_index(
     Same loud-failure ordering contract as ``recover_epoch_state``: row
     epochs NEWER than the ready target mean a sink wrote past the crash
     before recovery ran — raise instead of silently deleting them.
-    ``model_dir``/``rows_dir`` follow ``_finish_retrain`` (IVF defaults;
-    ``recover_pq_index`` passes the PQ layout). Returns True when it
-    changed anything."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    changed = False
-    ready_dirs = _glob.glob(f"{index_dir}/.retrain.ready.epoch=*")
-    if ready_dirs:
-        ready = ready_dirs[0]
-        target = int(ready.rsplit("=", 1)[1])
-        newer = sorted(
-            int(p.rsplit("=", 1)[1])
-            for p in _glob.glob(f"{index_dir}/{rows_dir}/epoch=*")
-            if p.rsplit("=", 1)[1].isdigit() and int(p.rsplit("=", 1)[1]) > target
-        )
-        if newer:
-            raise RuntimeError(
-                f"recover_vector_index: {rows_dir} epochs {newer} under "
-                f"{index_dir} are NEWER than the interrupted retrain's "
-                f"target epoch={target} — a sink wrote past the crash "
-                "before recovery ran (their rows are encoded under the OLD "
-                "model and the staged rebuild has not folded them). Re-run "
-                "the retrain from scratch after discarding the ready dir, "
-                "or move the newer epochs aside deliberately."
-            )
-        _finish_retrain(index_dir, ready, target, model_dir, rows_dir)
-        changed = True
-    tmp = f"{index_dir}/.retrain.tmp"
-    if _os.path.exists(tmp):
-        _shutil.rmtree(tmp)
-        changed = True
-    return changed
+    ``model_dir``/``rows_dir`` name the model and rows layouts (IVF
+    defaults; ``recover_pq_index`` passes the PQ layout). Returns True
+    when it changed anything."""
+    return _recover_swap(_StateFs(), _index_swap(index_dir, model_dir, rows_dir))
 
 
 def retrain_pq_index(
@@ -2575,97 +2623,80 @@ def retrain_pq_index(
     Tombstones fold in at step 1, so ``.deletes/`` clears in the finish.
 
     Run with the stream stopped and no readers in flight
-    (``compact_epoch_state``'s contract; locally-mounted paths). Returns
-    the epoch id the rebuilt codes landed under."""
-    import glob as _glob
-    import os as _os
-
+    (``compact_epoch_state``'s contract). Returns the epoch id the rebuilt
+    codes landed under."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
         _pq_encode,
         pq_train_codebooks,
     )
 
-    tmp = f"{index_dir}/.retrain.tmp"
-    if _glob.glob(f"{index_dir}/.retrain.ready.epoch=*") or _os.path.exists(tmp):
-        raise RuntimeError(
-            f"retrain_pq_index: leftover retrain state under {index_dir} "
-            "from an interrupted run — call recover_pq_index(index_dir) "
-            "first"
+    def stage(tmp: str) -> None:
+        live_ids = _live_rows(spark, index_dir, f"{index_dir}/codes").select("__iid")
+        # ONE aggregation pass dedups the source AND detects duplicate ids
+        # carrying DIFFERENT vectors (which would make the rebuild
+        # nondeterministic — breaking the "rebuilt == fresh batch build,
+        # bit-exact" guarantee the sibling rebuild paths enforce; identical
+        # duplicates are fine, first() is then exact). Persisted so the
+        # conflict count, the missing-id check, and the re-encode all reuse
+        # the same shuffle instead of re-scanning the vector source.
+        # NULL vectors are filtered BEFORE the groupBy: count_distinct ignores
+        # NULLs, so an id with one NULL row plus one real row would pass the
+        # conflict guard (__nv=1) while a plain first() could still
+        # nondeterministically pick the NULL — exactly the nondeterministic
+        # rebuild the guard exists to prevent. Filtered out, an id whose rows
+        # are ALL NULL simply vanishes from the source and trips the loud
+        # missing-live-id check below instead; ignorenulls on first() is
+        # belt-and-braces for the same hazard.
+        src_agg = (
+            vectors.select(qcol(id_col).alias("__iid"), qcol(vec_col).alias("__vec"))
+            .where(F.col("__vec").isNotNull())
+            .groupBy("__iid")
+            .agg(
+                F.count_distinct(F.col("__vec")).alias("__nv"),
+                F.first("__vec", ignorenulls=True).alias("__vec"),
+            )
+            .persist()
         )
-    epochs = sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{index_dir}/codes/epoch=*")
-        if p.rsplit("=", 1)[1].isdigit()
+        try:
+            n_conflicts = src_agg.where(F.col("__nv") > 1).count()
+            if n_conflicts:
+                raise ValueError(
+                    f"retrain_pq_index: {n_conflicts} id(s) in the vector source "
+                    "carry conflicting vectors — the source must be id-unique "
+                    "(or duplicate rows must agree) for a deterministic rebuild"
+                )
+            src = src_agg.select("__iid", "__vec")
+            # loud failure before any state is staged: a live indexed id missing
+            # from the vector source would silently vanish from the rebuilt index
+            n_missing = live_ids.join(src.select("__iid"), "__iid", "left_anti").count()
+            if n_missing:
+                raise ValueError(
+                    f"retrain_pq_index: {n_missing} live indexed id(s) have no row "
+                    f"in the supplied vector source — the code index stores no "
+                    "vectors, so every live id must be re-suppliable to re-encode"
+                )
+            live = src.join(live_ids, "__iid", "left_semi")
+            books = pq_train_codebooks(
+                live, "__iid", "__vec", dim, n_sub, n_codes, refine_iters, train_rows
+            )
+            encoded = _pq_encode(live, "__iid", "__vec", books, dim, n_sub)
+            rows = [
+                (m, c, [float(x) for x in cw[c]])
+                for m, cw in enumerate(books)
+                for c in range(len(cw))
+            ]
+            spark.createDataFrame(
+                rows, "m int, code int, codeword array<double>"
+            ).write.mode("overwrite").parquet(f"{tmp}/codebooks")
+            encoded.write.mode("overwrite").parquet(f"{tmp}/codes")
+        finally:
+            src_agg.unpersist()
+
+    swap = _index_swap(
+        index_dir, "codebooks", "codes", "retrain_pq_index", "recover_pq_index(index_dir)"
     )
-    if not epochs:
-        raise ValueError(
-            f"retrain_pq_index: no codes/epoch partitions under {index_dir}"
-        )
-    live_ids = _live_rows(spark, index_dir, f"{index_dir}/codes").select("__iid")
-    # ONE aggregation pass dedups the source AND detects duplicate ids
-    # carrying DIFFERENT vectors (which would make the rebuild
-    # nondeterministic — breaking the "rebuilt == fresh batch build,
-    # bit-exact" guarantee the sibling rebuild paths enforce; identical
-    # duplicates are fine, first() is then exact). Persisted so the
-    # conflict count, the missing-id check, and the re-encode all reuse
-    # the same shuffle instead of re-scanning the vector source.
-    # NULL vectors are filtered BEFORE the groupBy: count_distinct ignores
-    # NULLs, so an id with one NULL row plus one real row would pass the
-    # conflict guard (__nv=1) while a plain first() could still
-    # nondeterministically pick the NULL — exactly the nondeterministic
-    # rebuild the guard exists to prevent. Filtered out, an id whose rows
-    # are ALL NULL simply vanishes from the source and trips the loud
-    # missing-live-id check below instead; ignorenulls on first() is
-    # belt-and-braces for the same hazard.
-    src_agg = (
-        vectors.select(qcol(id_col).alias("__iid"), qcol(vec_col).alias("__vec"))
-        .where(F.col("__vec").isNotNull())
-        .groupBy("__iid")
-        .agg(
-            F.count_distinct(F.col("__vec")).alias("__nv"),
-            F.first("__vec", ignorenulls=True).alias("__vec"),
-        )
-        .persist()
-    )
-    n_conflicts = src_agg.where(F.col("__nv") > 1).count()
-    if n_conflicts:
-        src_agg.unpersist()
-        raise ValueError(
-            f"retrain_pq_index: {n_conflicts} id(s) in the vector source "
-            "carry conflicting vectors — the source must be id-unique "
-            "(or duplicate rows must agree) for a deterministic rebuild"
-        )
-    src = src_agg.select("__iid", "__vec")
-    # loud failure before any state is staged: a live indexed id missing
-    # from the vector source would silently vanish from the rebuilt index
-    n_missing = live_ids.join(src.select("__iid"), "__iid", "left_anti").count()
-    if n_missing:
-        src_agg.unpersist()
-        raise ValueError(
-            f"retrain_pq_index: {n_missing} live indexed id(s) have no row "
-            f"in the supplied vector source — the code index stores no "
-            "vectors, so every live id must be re-suppliable to re-encode"
-        )
-    live = src.join(live_ids, "__iid", "left_semi")
-    books = pq_train_codebooks(
-        live, "__iid", "__vec", dim, n_sub, n_codes, refine_iters, train_rows
-    )
-    encoded = _pq_encode(live, "__iid", "__vec", books, dim, n_sub)
-    rows = [
-        (m, c, [float(x) for x in cw[c]])
-        for m, cw in enumerate(books)
-        for c in range(len(cw))
-    ]
-    spark.createDataFrame(
-        rows, "m int, code int, codeword array<double>"
-    ).write.mode("overwrite").parquet(f"{tmp}/codebooks")
-    encoded.write.mode("overwrite").parquet(f"{tmp}/codes")
-    src_agg.unpersist()
-    ready = f"{index_dir}/.retrain.ready.epoch={epochs[-1]}"
-    _os.rename(tmp, ready)
-    _finish_retrain(index_dir, ready, epochs[-1], "codebooks", "codes")
-    return epochs[-1]
+    return _staged_swap(_StateFs(spark), swap, stage)
 
 
 def recover_pq_index(index_dir: str) -> bool:
@@ -2705,21 +2736,17 @@ def purge_semantic_tombstones(
     this a tombstoned id is reusable as a fresh add. The frozen centroid
     model is untouched (takedowns don't move cell geometry — retraining
     is the sink's documented drift path). ``compact_epoch_state``'s
-    contract applies verbatim: stream stopped, no readers in flight,
-    locally-mounted paths."""
-    import shutil as _shutil
-
-    if not _hadoop_path_exists(spark, f"{members_dir}/.deletes"):
-        raise ValueError(
-            f"purge_semantic_tombstones: no tombstones under "
-            f"{members_dir}/.deletes — nothing to purge (plain compaction "
-            "is compact_epoch_state)"
-        )
-    live_pairs = read_semantic_pairs(spark, members_dir, pairs_dir)
-    members = _live_rows(spark, members_dir, members_dir)
-    compact_epoch_state(live_pairs, pairs_dir)
-    compact_epoch_state(members, members_dir)
-    _shutil.rmtree(f"{members_dir}/.deletes")
+    contract applies verbatim: stream stopped, no readers in flight. A
+    purge interrupted by a crash is finished by running it again."""
+    _purge_tombstones(
+        _StateFs(spark),
+        "purge_semantic_tombstones",
+        f"{members_dir}/.deletes",
+        [
+            (lambda: read_semantic_pairs(spark, members_dir, pairs_dir), pairs_dir, None),
+            (lambda: _live_rows(spark, members_dir, members_dir), members_dir, None),
+        ],
+    )
 
 
 def retrain_semantic_index(
@@ -2747,18 +2774,16 @@ def retrain_semantic_index(
     geometry-dependent — cells decide who gets compared, so a retrain
     invalidates the old pair epochs by construction), then swap the THREE
     layouts atomically via the ``.retrain.tmp`` →
-    ``.retrain.ready.epoch=N`` protocol rooted under ``members_dir``
+    ``.retrain.ready.epoch=N`` protocol (``_staged_swap``) rooted under
+    ``members_dir``
     (``recover_semantic_index`` resumes idempotently from any crash
     prefix). Member tombstones fold in at step 1, so ``.deletes/``
     clears in the finish. Pass the SAME n_cells/threshold/refine_iters
     as the sink or you are rebuilding a different index.
 
     Run with the stream stopped and no readers in flight
-    (``compact_epoch_state``'s contract; locally-mounted paths). Returns
-    the epoch id the rebuilt members/pairs landed under."""
-    import glob as _glob
-    import os as _os
-
+    (``compact_epoch_state``'s contract). Returns the epoch id the rebuilt
+    members/pairs landed under."""
     from real_time_recommendation_system_with_feature_store_spark.functions.vectors import dot
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
         _assign_cells,
@@ -2766,101 +2791,62 @@ def retrain_semantic_index(
     )
     from real_time_recommendation_system_with_feature_store_spark.operators.topk import global_topn_ranked
 
-    tmp = f"{members_dir}/.retrain.tmp"
-    if _glob.glob(f"{members_dir}/.retrain.ready.epoch=*") or _os.path.exists(tmp):
-        raise RuntimeError(
-            f"retrain_semantic_index: leftover retrain state under "
-            f"{members_dir} from an interrupted run — call "
-            "recover_semantic_index(centroids_dir, members_dir, pairs_dir) "
-            "first"
+    def stage(tmp: str) -> None:
+        live = _live_rows(spark, members_dir, members_dir).select("__iid", "__iv")
+        cents = global_topn_ranked(
+            live, [F.col("__iid").asc()], n_cells, rank_col="__cell"
+        ).select(
+            F.col("__cell").cast("int").alias("__cell"), F.col("__iv").alias("__cv")
         )
-    epochs = sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{members_dir}/epoch=*")
-        if p.rsplit("=", 1)[1].isdigit()
-    )
-    if not epochs:
-        raise ValueError(
-            f"retrain_semantic_index: no member epoch partitions under "
-            f"{members_dir}"
-        )
-    live = _live_rows(spark, members_dir, members_dir).select("__iid", "__iv")
-    cents = global_topn_ranked(
-        live, [F.col("__iid").asc()], n_cells, rank_col="__cell"
-    ).select(
-        F.col("__cell").cast("int").alias("__cell"), F.col("__iv").alias("__cv")
-    )
-    # n_cells rows; without the eager cut the seed+Lloyd subtree would
-    # re-execute for the centroids write AND every assigned consumer
-    cents = _lloyd_refine(live, cents, refine_iters).localCheckpoint(eager=True)
-    # assigned feeds three actions (members write + both sides of the
-    # pair self-join) — persist it once instead of re-scanning and
-    # re-assigning the live fold per consumer
-    assigned = _assign_cells(live, cents).persist()
-    try:
-        new = assigned.select(
-            "__cell", F.col("__iid").alias("id_b"), F.col("__iv").alias("__vb")
-        )
-        olds = assigned.select(
-            "__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va")
-        )
-        pairs = (
-            olds.join(new, "__cell")
-            .where(F.col("id_a") != F.col("id_b"))
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-                F.round(dot(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
+        # n_cells rows; without the eager cut the seed+Lloyd subtree would
+        # re-execute for the centroids write AND every assigned consumer
+        cents = _lloyd_refine(live, cents, refine_iters).localCheckpoint(eager=True)
+        # assigned feeds three actions (members write + both sides of the
+        # pair self-join) — persist it once instead of re-scanning and
+        # re-assigning the live fold per consumer
+        assigned = _assign_cells(live, cents).persist()
+        try:
+            new = assigned.select(
+                "__cell", F.col("__iid").alias("id_b"), F.col("__iv").alias("__vb")
             )
-            .where(F.col("cosine") >= threshold)
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        cents.write.mode("overwrite").parquet(f"{tmp}/centroids")
-        assigned.select("__cell", "__iid", "__iv").write.mode("overwrite").parquet(
-            f"{tmp}/members"
-        )
-        pairs.write.mode("overwrite").parquet(f"{tmp}/pairs")
-    finally:
-        assigned.unpersist()
-    ready = f"{members_dir}/.retrain.ready.epoch={epochs[-1]}"
-    _os.rename(tmp, ready)
-    _finish_retrain_semantic(
-        centroids_dir, members_dir, pairs_dir, ready, epochs[-1]
+            olds = assigned.select(
+                "__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va")
+            )
+            pairs = (
+                olds.join(new, "__cell")
+                .where(F.col("id_a") != F.col("id_b"))
+                .select(
+                    F.least("id_a", "id_b").alias("id_a"),
+                    F.greatest("id_a", "id_b").alias("id_b"),
+                    F.round(dot(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
+                )
+                .where(F.col("cosine") >= threshold)
+                .dropDuplicates(["id_a", "id_b"])
+            )
+            cents.write.mode("overwrite").parquet(f"{tmp}/centroids")
+            assigned.select("__cell", "__iid", "__iv").write.mode("overwrite").parquet(
+                f"{tmp}/members"
+            )
+            pairs.write.mode("overwrite").parquet(f"{tmp}/pairs")
+        finally:
+            assigned.unpersist()
+
+    return _staged_swap(
+        _StateFs(spark), _semantic_swap(centroids_dir, members_dir, pairs_dir), stage
     )
-    return epochs[-1]
 
 
-def _finish_retrain_semantic(
-    centroids_dir: str,
-    members_dir: str,
-    pairs_dir: str,
-    ready: str,
-    target: int,
-) -> None:
-    """Move a staged semantic retrain into place across its three
-    layouts. Idempotent by construction — each step keys on what still
-    exists under the ready dir, so recovery can re-enter after a crash at
-    any point (same discipline as ``_finish_retrain``)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    if _os.path.exists(f"{ready}/centroids"):
-        _shutil.rmtree(centroids_dir, ignore_errors=True)
-        _os.rename(f"{ready}/centroids", centroids_dir)
-    for name, root in (("members", members_dir), ("pairs", pairs_dir)):
-        if _os.path.exists(f"{ready}/{name}"):
-            for p in _glob.glob(f"{root}/epoch=*"):
-                if p.rsplit("=", 1)[1].isdigit():
-                    _shutil.rmtree(p)
-            _os.rename(f"{ready}/{name}", f"{root}/epoch={target}")
-    if _os.path.exists(f"{members_dir}/.deletes"):
-        _shutil.rmtree(f"{members_dir}/.deletes")
-    # same finalization-floor discipline as _finish_retrain, per layout;
-    # unconditional (max fold) so crash re-entry still lands both floors
-    _write_compacted_floor(members_dir, target)
-    _write_compacted_floor(pairs_dir, target)
-    _shutil.rmtree(ready, ignore_errors=True)
+def _semantic_swap(centroids_dir: str, members_dir: str, pairs_dir: str) -> _Swap:
+    """The semantic sink's retrain layout: the frozen centroids, and the
+    member and pair epochs, staged under ``members_dir``."""
+    return _Swap(
+        members_dir, "retrain",
+        ((members_dir, "members"), (pairs_dir, "pairs")),
+        ((centroids_dir, "centroids"),),
+        (f"{members_dir}/.deletes",),
+        "retrain_semantic_index",
+        "recover_semantic_index(centroids_dir, members_dir, pairs_dir)",
+    )
 
 
 def recover_semantic_index(
@@ -2874,40 +2860,7 @@ def recover_semantic_index(
     discards; member OR pair epochs newer than the ready target fail
     loudly (a restarted sink wrote rows under the OLD geometry the staged
     rebuild never folded). Returns True when it changed anything."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    changed = False
-    ready_dirs = _glob.glob(f"{members_dir}/.retrain.ready.epoch=*")
-    if ready_dirs:
-        ready = ready_dirs[0]
-        target = int(ready.rsplit("=", 1)[1])
-        newer = sorted(
-            int(p.rsplit("=", 1)[1])
-            for root in (members_dir, pairs_dir)
-            for p in _glob.glob(f"{root}/epoch=*")
-            if p.rsplit("=", 1)[1].isdigit() and int(p.rsplit("=", 1)[1]) > target
-        )
-        if newer:
-            raise RuntimeError(
-                f"recover_semantic_index: member/pair epochs {newer} are "
-                f"NEWER than the interrupted retrain's target epoch="
-                f"{target} — a sink wrote past the crash before recovery "
-                "ran (their rows pair under the OLD geometry and the "
-                "staged rebuild has not folded them). Re-run the retrain "
-                "from scratch after discarding the ready dir, or move the "
-                "newer epochs aside deliberately."
-            )
-        _finish_retrain_semantic(
-            centroids_dir, members_dir, pairs_dir, ready, target
-        )
-        changed = True
-    tmp = f"{members_dir}/.retrain.tmp"
-    if _os.path.exists(tmp):
-        _shutil.rmtree(tmp)
-        changed = True
-    return changed
+    return _recover_swap(_StateFs(), _semantic_swap(centroids_dir, members_dir, pairs_dir))
 
 
 def lsh_index_stream(

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import time
 
 import pytest
 
@@ -40,6 +43,53 @@ def pytest_configure(config):
         "-m foldtwin while iterating on sink code, or skip the tier when "
         "it cannot be affected — not bulk wall-clock savings.",
     )
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_T0 = pytest.StashKey[float]()
+_HEAVY = pytest.StashKey[bool]()
+
+
+def pytest_sessionstart(session):
+    session.stash[_T0] = time.monotonic()
+
+
+def pytest_collection_finish(session):
+    session.stash[_HEAVY] = any(item.get_closest_marker("heavy") for item in session.items)
+
+
+def _git(*args):
+    try:
+        return subprocess.run(
+            ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
+def pytest_sessionfinish(session, exitstatus):
+    """The heavy tier is certified by an artifact: a run that selects any
+    heavy test writes HEAVY_TIER.json at the repo root (commit, outcome
+    counts, wall time, marker expression)."""
+    if not session.stash.get(_HEAVY, False):
+        return
+    reporter = session.config.pluginmanager.get_plugin("terminalreporter")
+    stats = reporter.stats if reporter else {}
+    status = _git("status", "--porcelain", "--untracked-files=no")
+    record = {
+        "git_sha": _git("rev-parse", "HEAD"),
+        "git_dirty": None if status is None else bool(status),
+        "passed": len(stats.get("passed", [])),
+        "failed": len(stats.get("failed", [])),
+        "errors": len(stats.get("error", [])),
+        "skipped": len(stats.get("skipped", [])),
+        "duration_s": round(time.monotonic() - session.stash[_T0], 1),
+        "markexpr": session.config.option.markexpr,
+        "args": session.config.args,
+    }
+    with open(os.path.join(REPO, "HEAVY_TIER.json"), "w") as fh:
+        json.dump(record, fh, indent=2)
+        fh.write("\n")
 
 
 @pytest.fixture(scope="session")
