@@ -8,6 +8,15 @@ before exact rescoring. ``ivf_topk`` mirrors the reference's actual index
 60-62,88-108) as DataFrame joins: cluster the catalog once, search only the
 probed cells. ``cosine_near_dup_pairs`` is the embedding-space near-duplicate
 detector (same join, thresholded instead of ranked).
+
+Each ANN index kind has ONE search tail that takes the index rows:
+``_ivf_probes``/``_ivf_search`` (probe the nearest cells, rescore),
+``_lsh_search`` (bucket join, rescore) and ``_pq_adc_topk`` (ADC table
+lookups). The batch operators pass the index they just built; the
+streaming ``*_search_from_index`` (streaming/pipeline.py) pass the folded
+live index, so a stream-built index answers exactly like a batch build.
+The query-side broadcasts in those tails are gated by
+``plans.inspect.gated_broadcast``.
 """
 
 from __future__ import annotations
@@ -223,27 +232,29 @@ def _splitmix64_np(x):
     return x ^ (x >> np.uint64(31))
 
 
-def _sign_projection_bits(vec, dim: int, n_planes: int, salt: int = 0):
-    """Deterministic pseudo-random hyperplanes: component (p,i) is derived
-    from xxhash64(salt,p,i) mapped to {-1,+1}. No rand(), so buckets are
-    stable across partitionings and re-runs; ``salt`` makes hash TABLES
-    independent (same-prefix planes would correlate every table)."""
-    bits = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda x, i: x
-                * F.when(
-                    F.pmod(F.xxhash64(F.lit(salt), F.lit(p), i), F.lit(2)) == 0, F.lit(1.0)
-                ).otherwise(F.lit(-1.0)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)).cast("string"))
-    return F.concat_ws("", *bits)
+def _require_positive(who: str, **params: int) -> None:
+    """The search entry points' argument check, run before anything is
+    read: a non-positive ``k`` or ``n_probe`` would otherwise return no
+    rows without a word (``topk_per_key`` keeps ``rank <= k``)."""
+    if any(v <= 0 for v in params.values()):
+        got = ", ".join(f"{n}={v}" for n, v in params.items())
+        raise ValueError(f"{who}: {' and '.join(params)} must be positive, got {got}")
+
+
+def _rescore_topk(
+    cand: DataFrame, score, query_id: str, item_id: str, k: int, exclude_self: bool
+) -> DataFrame:
+    """(__qid, __iid, ...) candidate pairs -> (query_id, item_id, score,
+    rank): drop self-matches, round ``score`` to 6 dp, per-query top-k
+    with the item id as the tie-break."""
+    if exclude_self:
+        cand = cand.where(F.col("__qid") != F.col("__iid"))
+    scored = cand.select(
+        F.col("__qid").alias(query_id),
+        F.col("__iid").alias(item_id),
+        F.round(score, 6).alias("score"),
+    )
+    return topk_per_key(scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k)
 
 
 def _bucket_rows_arrow(
@@ -305,7 +316,6 @@ def lsh_topk(
     n_planes: int = 4,
     n_tables: int = 8,
     exclude_self: bool = True,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Approximate cosine top-k via sign-random-projection LSH.
 
@@ -314,59 +324,41 @@ def lsh_topk(
     exact cosine rescoring + per-query top-k. Candidate volume scales as
     |items| / 2^n_planes per table — tune n_planes to catalog size.
 
-    ``kernel="arrow"``: projections are one numpy matmul per Arrow batch and
-    rescoring is an einsum over candidate pairs; the Column-expression path
-    (``kernel="expr"``) evaluates an interpreted fold per (row, plane).
-    The two kernels use different (equally deterministic) plane families, so
-    candidate sets — not correctness contracts — may differ.
+    Projections are one numpy matmul per Arrow batch
+    (``_bucket_rows_arrow``) and rescoring is an einsum over the candidate
+    pairs; the search is ``_lsh_search``, shared with the streaming index
+    (``lsh_search_from_index``).
     """
-    if kernel == "arrow":
-        q = _bucket_rows_arrow(queries, query_id, query_vec, "__qid", dim, n_planes, n_tables)
-        it = _bucket_rows_arrow(items, item_id, item_vec, "__iid", dim, n_planes, n_tables)
-        cand = (
-            q.join(it, "__bucket")
-            .where(F.col("__qid") != F.col("__iid") if exclude_self else F.lit(True))
-            .select("__qid", "__iid", q["__v"].alias("__qv"), it["__v"].alias("__iv"))
-            .dropDuplicates(["__qid", "__iid"])
-        )
-        scored = (
-            _pair_dot_arrow(
-                cand.select(
-                    F.col("__qid").alias(query_id),
-                    F.col("__iid").alias(item_id),
-                    "__qv",
-                    "__iv",
-                ),
-                query_id,
-                item_id,
-                "__qv",
-                "__iv",
-            )
-        )
-        return topk_per_key(scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k)
+    _require_positive("lsh_topk", k=k)
+    it = _bucket_rows_arrow(items, item_id, item_vec, "__iid", dim, n_planes, n_tables)
+    return _lsh_search(
+        it, queries, query_id, query_vec, item_id, dim, k, n_planes, n_tables, exclude_self
+    )
 
-    def with_buckets(df, id_col, vec_col, out_id):
-        norm = df.select(F.col(id_col).alias(out_id), l2_normalize(F.col(vec_col)).alias("__v"))
-        buckets = F.array(
-            *[
-                F.concat_ws("|", F.lit(str(t)), _sign_projection_bits(F.col("__v"), dim, n_planes, salt=t))
-                for t in range(n_tables)
-            ]
-        )
-        return norm.withColumn("__bucket", F.explode(buckets))
 
-    q = with_buckets(queries, query_id, query_vec, "__qid")
-    it = with_buckets(items, item_id, item_vec, "__iid")
+def _lsh_search(
+    it: DataFrame, queries: DataFrame, query_id: str, query_vec: str, item_id: str,
+    dim: int, k: int, n_planes: int, n_tables: int, exclude_self: bool,
+) -> DataFrame:
+    """The LSH search tail over index rows ``it`` = (__iid, __v normalized,
+    __bucket): bucket the queries with the same hyperplanes, join on the
+    bucket key, dedup candidate pairs across tables, exact-cosine rescore
+    (Arrow einsum), per-query top-k. Output id column: ``item_id``."""
+    q = _bucket_rows_arrow(queries, query_id, query_vec, "__qid", dim, n_planes, n_tables)
     cand = (
         q.join(it, "__bucket")
         .where(F.col("__qid") != F.col("__iid") if exclude_self else F.lit(True))
         .select("__qid", "__iid", q["__v"].alias("__qv"), it["__v"].alias("__iv"))
         .dropDuplicates(["__qid", "__iid"])
     )
-    scored = cand.select(
-        F.col("__qid").alias(query_id),
-        F.col("__iid").alias(item_id),
-        F.round(dot(F.col("__qv"), F.col("__iv")), 6).alias("score"),
+    scored = _pair_dot_arrow(
+        cand.select(
+            F.col("__qid").alias(query_id), F.col("__iid").alias(item_id), "__qv", "__iv"
+        ),
+        query_id,
+        item_id,
+        "__qv",
+        "__iv",
     )
     return topk_per_key(scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k)
 
@@ -482,13 +474,9 @@ def semantic_dedup(
     """
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.dedup import connected_components
-    from real_time_recommendation_system_with_feature_store_spark.operators.topk import global_topn_ranked
 
     it = df.select(qcol(id_col).alias("__iid"), l2_normalize(qcol(vec_col)).alias("__iv"))
-    centroids = global_topn_ranked(
-        it, [F.col("__iid").asc()], n_cells, rank_col="__cell"
-    ).select(F.col("__cell").cast("int").alias("__cell"), F.col("__iv").alias("__cv"))
-    centroids = _lloyd_refine(it, centroids, refine_iters)
+    centroids = ivf_build_centroids(it, "__iid", "__iv", n_cells, refine_iters, assume_unit=True)
     # one eager snapshot: the assignment feeds BOTH the pair generation and
     # the final output join — without it the whole IVF build runs twice, and
     # the component loop's edge frame drags the build tree into every round
@@ -562,18 +550,18 @@ def ivf_build_centroids(
     that must survive an oversized catalog, exactly when a one-task sort
     would hurt most) — then ``refine_iters`` distributed Lloyd steps.
     Returns ``(__cell int, __cv array)``, unit-norm. This is the exact
-    construction ``ivf_topk(kernel="expr")`` uses internally; a FROZEN
-    copy of it is what the streaming index sink
+    construction ``ivf_topk(kernel="expr")`` and ``semantic_dedup`` use
+    internally; a FROZEN copy of it is what the streaming index sink
     (streaming/pipeline.py::ivf_index_stream) keeps adding into — the
     faiss train-once / add-incrementally split the reference makes
     (src/serving/retrieval.py:88-139).
 
-    ``assume_unit=True`` skips the L2 normalization — for retraining on
-    vectors an index already stores in unit form
-    (``streaming/pipeline.retrain_vector_index``): re-normalizing a unit
-    vector perturbs its last ulp, which would make a rebuilt quantizer
-    differ bit-wise from a fresh build over the raw corpus; skipping it
-    keeps rebuild ≡ fresh-build exact."""
+    ``assume_unit=True`` skips the L2 normalization — for vectors that are
+    already unit (``semantic_dedup``'s normalized frame, the vectors an
+    index stores in ``streaming/pipeline``'s sinks and retrains):
+    re-normalizing a unit vector perturbs its last ulp, which would make a
+    rebuilt quantizer differ bit-wise from a fresh build over the raw
+    corpus; skipping it keeps rebuild ≡ fresh-build exact."""
     from real_time_recommendation_system_with_feature_store_spark.ident import qcol
     from real_time_recommendation_system_with_feature_store_spark.operators.topk import global_topn_ranked
 
@@ -622,20 +610,32 @@ def ivf_topk(
     The arrow kernel collects the query side for probe selection, so it is
     gated on the plan-size estimate; an oversized query side routes to the
     distributed expression plan (and the probe join loses its broadcast
-    hint — AQE decides).
+    hint — AQE decides). The expression plan's search is
+    ``_ivf_probes``/``_ivf_search``, shared with the streaming index
+    (``ivf_search_from_index``).
     """
-    q_small = _fits_driver(queries.select(query_id, query_vec))
-    if kernel == "arrow" and q_small:
+    _require_positive("ivf_topk", k=k, n_probe=n_probe)
+    if kernel == "arrow" and _fits_driver(queries.select(query_id, query_vec)):
         return _ivf_topk_arrow(
             queries, items, query_id, item_id, query_vec, item_vec,
             k, n_cells, n_probe, refine_iters, exclude_self,
         )
     it = items.select(F.col(item_id).alias("__iid"), l2_normalize(F.col(item_vec)).alias("__iv"))
     centroids = ivf_build_centroids(items, item_id, item_vec, n_cells, refine_iters)
-    assigned = _assign_cells(it, centroids)
+    probes = _ivf_probes(queries, query_id, query_vec, centroids, n_probe)
+    return _ivf_search(
+        _assign_cells(it, centroids), probes, queries.select(query_id, query_vec),
+        query_id, item_id, k, exclude_self,
+    )
 
+
+def _ivf_probes(
+    queries: DataFrame, query_id: str, query_vec: str, centroids: DataFrame, n_probe: int
+) -> DataFrame:
+    """(__qid, __qv normalized, __cell): each query's ``n_probe`` nearest
+    cells of the (__cell, __cv) quantizer, ties to the lower cell id."""
     q = queries.select(F.col(query_id).alias("__qid"), l2_normalize(F.col(query_vec)).alias("__qv"))
-    probes = topk_per_key(
+    return topk_per_key(
         q.crossJoin(F.broadcast(centroids)).select(
             "__qid", "__qv", "__cell", dot(F.col("__qv"), F.col("__cv")).alias("__cs")
         ),
@@ -645,19 +645,25 @@ def ivf_topk(
         rank_col="__prank",
     ).select("__qid", "__qv", "__cell")
 
-    # broadcast the probe list (|queries| × n_probe rows): a shuffle join on
-    # __cell would hash-partition the whole catalog across ≤ n_cells keys —
-    # guaranteed skew; broadcasting keeps the item side map-side only.
-    # Oversized query side: no hint — AQE picks (and can skew-split).
-    cand = assigned.join(F.broadcast(probes) if q_small else probes, "__cell")
-    if exclude_self:
-        cand = cand.where(F.col("__qid") != F.col("__iid"))
-    scored = cand.select(
-        F.col("__qid").alias(query_id),
-        F.col("__iid").alias(item_id),
-        F.round(dot(F.col("__qv"), F.col("__iv")), 6).alias("score"),
-    )
-    return topk_per_key(scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k)
+
+def _ivf_search(
+    cells: DataFrame, probes: DataFrame, q_gate: DataFrame, query_id: str, item_id: str,
+    k: int, exclude_self: bool,
+) -> DataFrame:
+    """The IVF search tail: join the index rows ``cells`` = (__iid, __iv,
+    __cell) to the ``_ivf_probes`` list, exact-cosine rescore, per-query
+    top-k. Output id column: ``item_id``.
+
+    The probe list (|queries| × n_probe rows) broadcasts: a shuffle join
+    on __cell would hash-partition the whole catalog across ≤ n_cells keys
+    — guaranteed skew; broadcasting keeps the item side map-side only. The
+    hint is gated on the size estimate of the query projection ``q_gate``;
+    an oversized query side gets no hint and AQE picks (and can
+    skew-split)."""
+    from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
+
+    cand = cells.join(gated_broadcast(probes, gate_df=q_gate), "__cell")
+    return _rescore_topk(cand, dot(F.col("__qv"), F.col("__iv")), query_id, item_id, k, exclude_self)
 
 
 def _ivf_topk_arrow(
@@ -1034,16 +1040,27 @@ def _pq_query_tables(queries: DataFrame, query_id: str, query_vec: str, books, d
     return queries.select(query_id, query_vec).mapInPandas(query_tables, dt_schema)
 
 
-def _pq_adc_score_expr(n_sub: int, n_codes: int):
-    """ADC score = Σ_m dt[m·n_codes + code_m] — n_sub literal element_at
-    lookups over the broadcast table, fully codegen'd."""
+def _pq_adc_topk(
+    encoded: DataFrame, qtab: DataFrame, q_gate: DataFrame, query_id: str, item_id: str,
+    n_sub: int, n_codes: int, k: int, exclude_self: bool,
+) -> DataFrame:
+    """The PQ search tail (ADC): the code index ``encoded`` = (__iid,
+    __code) × the ``_pq_query_tables`` rows ``qtab``, approximate score =
+    Σ_m dt[m·n_codes + code_m] — n_sub literal element_at lookups, fully
+    codegen'd, no vectors on the scan side — then per-query top-k. Output
+    id column: ``item_id``. The query tables broadcast when the query
+    projection ``q_gate`` fits the size estimate; oversized query frames
+    leave the join strategy to AQE."""
+    from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
+
     score = None
     for m in range(n_sub):
         term = F.element_at(
             F.col("__dt"), F.lit(m * n_codes) + F.element_at(F.col("__code"), m + 1) + 1
         )
         score = term if score is None else score + term
-    return score
+    cand = encoded.crossJoin(gated_broadcast(qtab.select("__qid", "__dt"), gate_df=q_gate))
+    return _rescore_topk(cand, score, query_id, item_id, k, exclude_self)
 
 
 def pq_topk(
@@ -1096,6 +1113,9 @@ def pq_topk(
     """
     from pyspark.sql import types as T
 
+    from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
+
+    _require_positive("pq_topk", k=k)
     spark = items.sparkSession
     empty_schema = T.StructType(
         [
@@ -1116,42 +1136,24 @@ def pq_topk(
     encoded = _pq_encode(items, item_id, item_vec, books, dim, n_sub)
 
     # Query tables are built DISTRIBUTED (mapInPandas against the broadcast
-    # codebook) — no driver collect, so an unbounded query side works; the
-    # broadcast hint on the join is still gated on the plan-size estimate
-    # (oversized query frames leave the join strategy to AQE).
-    q_small = _fits_driver(queries.select(query_id, query_vec))
+    # codebook) — no driver collect, so an unbounded query side works
+    q_gate = queries.select(query_id, query_vec)
     qtab = _pq_query_tables(queries, query_id, query_vec, books, dim, n_sub)
-    if rerank > 0:
-        # consumed twice (ADC join + re-rank qv join): snapshot so the
-        # normalization+codebook-matmul kernel runs once, not per consumer
-        # (GC-managed blocks — no CacheManager leak)
-        qtab = qtab.localCheckpoint(eager=True)
-    qdt = qtab.select("__qid", "__dt")
-
-    # ADC: approximate score = Σ_m dt[m·n_codes + code_m] — n_sub literal
-    # element_at lookups, fully codegen'd; no vectors on the scan side
-    score = _pq_adc_score_expr(n_sub, n_codes)
-    cand = encoded.crossJoin(F.broadcast(qdt) if q_small else qdt)
-    if exclude_self:
-        cand = cand.where(F.col("__qid") != F.col("__iid"))
-    scored = cand.select(
-        F.col("__qid").alias(query_id),
-        F.col("__iid").alias(item_id),
-        F.round(score, 6).alias("score"),
-    )
     if rerank <= 0:
-        return topk_per_key(
-            scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
-        )
-    shortlist = topk_per_key(
-        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], rerank * k
+        return _pq_adc_topk(encoded, qtab, q_gate, query_id, item_id, n_sub, n_codes, k, exclude_self)
+    # consumed twice (ADC join + re-rank qv join): snapshot so the
+    # normalization+codebook-matmul kernel runs once, not per consumer
+    # (GC-managed blocks — no CacheManager leak)
+    qtab = qtab.localCheckpoint(eager=True)
+    shortlist = _pq_adc_topk(
+        encoded, qtab, q_gate, query_id, item_id, n_sub, n_codes, rerank * k, exclude_self
     ).select(query_id, item_id)
     # exact rescoring touches only |Q|·rerank·k rows: re-attach true vectors
     # for the shortlist and the normalized query vectors (from the same
     # distributed table pass)
     qv = qtab.select(F.col("__qid").alias(query_id), "__qv")
     iv = items.select(F.col(item_id), l2_normalize(F.col(item_vec)).alias("__iv"))
-    exact = shortlist.join(iv, item_id).join(F.broadcast(qv) if q_small else qv, query_id).select(
+    exact = shortlist.join(iv, item_id).join(gated_broadcast(qv, gate_df=q_gate), query_id).select(
         query_id,
         item_id,
         F.round(dot(F.col("__qv"), F.col("__iv")), 6).alias("score"),

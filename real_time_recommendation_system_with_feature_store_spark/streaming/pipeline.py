@@ -429,12 +429,11 @@ def semantic_dedup_stream(
     idempotent; all state is parquet (the member table is the S10 dimension
     table — (16 B cell + id + vector) per row).
     """
-    from real_time_recommendation_system_with_feature_store_spark.functions.vectors import dot, l2_normalize
+    from real_time_recommendation_system_with_feature_store_spark.functions.vectors import l2_normalize
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
         _assign_cells,
-        _lloyd_refine,
+        ivf_build_centroids,
     )
-    from real_time_recommendation_system_with_feature_store_spark.operators.topk import global_topn_ranked
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -446,43 +445,47 @@ def semantic_dedup_stream(
                 return
             cents = _read_epochs_or_none(spark, centroids_dir)
             if cents is None:
-                cents = global_topn_ranked(
-                    it, [F.col("__iid").asc()], n_cells, rank_col="__cell"
-                ).select(F.col("__cell").cast("int").alias("__cell"), F.col("__iv").alias("__cv"))
-                cents = _lloyd_refine(it, cents, refine_iters)
+                cents = ivf_build_centroids(
+                    it, "__iid", "__iv", n_cells, refine_iters, assume_unit=True
+                )
                 cents.write.mode("overwrite").parquet(centroids_dir)
                 cents = spark.read.parquet(centroids_dir)
-            assigned = _assign_cells(it, cents)
+            assigned = _assign_cells(it, cents).select("__cell", "__iid", "__iv")
             prior = _read_epochs_or_none(spark, members_dir, F.col("epoch") != epoch_id)
-            new = assigned.select("__cell", F.col("__iid").alias("id_b"), F.col("__iv").alias("__vb"))
-            old_sides = [assigned.select("__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va"))]
+            olds = assigned
             if prior is not None:
-                old_sides.append(
-                    prior.select("__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va"))
-                )
-            olds = old_sides[0] if len(old_sides) == 1 else old_sides[0].unionByName(old_sides[1])
-            # normalize endpoints instead of requiring id_a < id_b across
-            # sides: a batch id smaller than a prior id must still pair even
-            # though the prior row sits on the "old" side (out-of-order feeds)
-            pairs = (
-                olds.join(new, "__cell")
-                .where(F.col("id_a") != F.col("id_b"))
-                .select(
-                    F.least("id_a", "id_b").alias("id_a"),
-                    F.greatest("id_a", "id_b").alias("id_b"),
-                    F.round(dot(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
-                )
-                .where(F.col("cosine") >= threshold)
-                .dropDuplicates(["id_a", "id_b"])
-            )
-            _write_epoch_state(pairs, pairs_dir, epoch_id)
-            _write_epoch_state(
-                assigned.select("__cell", "__iid", "__iv"), members_dir, epoch_id
-            )
+                olds = assigned.unionByName(prior.select("__cell", "__iid", "__iv"))
+            _write_epoch_state(_semantic_cell_pairs(olds, assigned, threshold), pairs_dir, epoch_id)
+            _write_epoch_state(assigned, members_dir, epoch_id)
         finally:
             it.unpersist()
 
     return _process
+
+
+def _semantic_cell_pairs(olds: DataFrame, new: DataFrame, threshold: float) -> DataFrame:
+    """The semantic near-dup pairs between two (__cell, __iid, __iv) member
+    frames: every same-cell pair whose round6(cosine) ≥ ``threshold``,
+    deduplicated. The sink pairs a batch with the prior members plus
+    itself; the retrain pairs the live members with themselves. Endpoints
+    are normalized instead of requiring id_a < id_b across sides: a batch
+    id smaller than a prior id must still pair even though the prior row
+    sits on the "old" side (out-of-order feeds)."""
+    from real_time_recommendation_system_with_feature_store_spark.functions.vectors import dot
+
+    a = olds.select("__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va"))
+    b = new.select("__cell", F.col("__iid").alias("id_b"), F.col("__iv").alias("__vb"))
+    return (
+        a.join(b, "__cell")
+        .where(F.col("id_a") != F.col("id_b"))
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            F.round(dot(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
+        )
+        .where(F.col("cosine") >= threshold)
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def cms_sketch_stream(
@@ -1219,59 +1222,29 @@ def ivf_search_from_index(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Probe the streaming-built IVF index: per query, score only the
-    ``n_probe`` nearest cells' stored vectors — identical math to
-    ``ivf_topk(kernel="expr")``'s search tail, so a stream-built index
-    over the same corpus returns the SAME rows (parity-tested). The union
-    of probed cells is collected driver-side (≤ n_cells scalars — the
-    sanctioned stats-gate collect) and pushed as an IN filter so the
+    ``n_probe`` nearest cells' stored vectors through the batch search
+    tail (``knn._ivf_probes``/``knn._ivf_search``, which
+    ``ivf_topk(kernel="expr")`` runs on a fresh build), so a stream-built
+    index over the same corpus returns the SAME rows (parity-tested). The
+    union of probed cells is collected driver-side (≤ n_cells scalars —
+    the sanctioned stats-gate collect) and pushed as an IN filter so the
     parquet read prunes to the probed ``__cell=`` partitions before the
-    epoch fold; the probe list broadcasts (a shuffle join on __cell would
-    hash the whole index across ≤ n_cells keys — guaranteed skew)."""
-    if k <= 0 or n_probe <= 0:
-        raise ValueError(
-            f"ivf_search_from_index: k and n_probe must be positive, got "
-            f"k={k}, n_probe={n_probe}"
-        )
-    from real_time_recommendation_system_with_feature_store_spark.functions.vectors import dot, l2_normalize
-    from real_time_recommendation_system_with_feature_store_spark.operators.topk import topk_per_key
-
-    cents = spark.read.parquet(f"{index_dir}/centroids")
-    q = queries.select(
-        F.col(query_id).alias("__qid"), l2_normalize(F.col(query_vec)).alias("__qv")
+    epoch fold."""
+    from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
+        _ivf_probes,
+        _ivf_search,
+        _require_positive,
     )
-    probes = topk_per_key(
-        q.crossJoin(F.broadcast(cents)).select(
-            "__qid", "__qv", "__cell", dot(F.col("__qv"), F.col("__cv")).alias("__cs")
-        ),
-        ["__qid"],
-        [F.col("__cs").desc(), F.col("__cell").asc()],
-        n_probe,
-        rank_col="__prank",
-    ).select("__qid", "__qv", "__cell")
+
+    _require_positive("ivf_search_from_index", k=k, n_probe=n_probe)
+    cents = spark.read.parquet(f"{index_dir}/centroids")
+    probes = _ivf_probes(queries, query_id, query_vec, cents, n_probe)
     probed_cells = [r["__cell"] for r in probes.select("__cell").distinct().collect()]
     cells = _live_rows(
         spark, index_dir, f"{index_dir}/cells", where=F.col("__cell").isin(probed_cells)
     )
-    # probe-side broadcast is stats-gated on the query projection (the
-    # probe frame is |Q|·n_probe rows — a bulk-inference query set can
-    # outgrow the budget; the batch ivf_topk applies the same gate, and
-    # the unhinted fallback lets AQE pick, since a static shuffle join on
-    # __cell would hash the whole index across ≤ n_cells keys)
-    from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
-
-    cand = cells.join(
-        gated_broadcast(probes, gate_df=queries.select(query_id, query_vec)),
-        "__cell",
-    )
-    if exclude_self:
-        cand = cand.where(F.col("__qid") != F.col("__iid"))
-    scored = cand.select(
-        F.col("__qid").alias(query_id),
-        F.col("__iid").alias(item_id),
-        F.round(dot(F.col("__qv"), F.col("__iv")), 6).alias("score"),
-    )
-    return topk_per_key(
-        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
+    return _ivf_search(
+        cells, probes, queries.select(query_id, query_vec), query_id, item_id, k, exclude_self
     )
 
 
@@ -2681,14 +2654,7 @@ def retrain_pq_index(
                 live, "__iid", "__vec", dim, n_sub, n_codes, refine_iters, train_rows
             )
             encoded = _pq_encode(live, "__iid", "__vec", books, dim, n_sub)
-            rows = [
-                (m, c, [float(x) for x in cw[c]])
-                for m, cw in enumerate(books)
-                for c in range(len(cw))
-            ]
-            spark.createDataFrame(
-                rows, "m int, code int, codeword array<double>"
-            ).write.mode("overwrite").parquet(f"{tmp}/codebooks")
+            _write_pq_codebooks(spark, books, f"{tmp}/codebooks")
             encoded.write.mode("overwrite").parquet(f"{tmp}/codes")
         finally:
             src_agg.unpersist()
@@ -2784,50 +2750,28 @@ def retrain_semantic_index(
     Run with the stream stopped and no readers in flight
     (``compact_epoch_state``'s contract). Returns the epoch id the rebuilt
     members/pairs landed under."""
-    from real_time_recommendation_system_with_feature_store_spark.functions.vectors import dot
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
         _assign_cells,
-        _lloyd_refine,
+        ivf_build_centroids,
     )
-    from real_time_recommendation_system_with_feature_store_spark.operators.topk import global_topn_ranked
 
     def stage(tmp: str) -> None:
         live = _live_rows(spark, members_dir, members_dir).select("__iid", "__iv")
-        cents = global_topn_ranked(
-            live, [F.col("__iid").asc()], n_cells, rank_col="__cell"
-        ).select(
-            F.col("__cell").cast("int").alias("__cell"), F.col("__iv").alias("__cv")
-        )
         # n_cells rows; without the eager cut the seed+Lloyd subtree would
         # re-execute for the centroids write AND every assigned consumer
-        cents = _lloyd_refine(live, cents, refine_iters).localCheckpoint(eager=True)
+        cents = ivf_build_centroids(
+            live, "__iid", "__iv", n_cells, refine_iters, assume_unit=True
+        ).localCheckpoint(eager=True)
         # assigned feeds three actions (members write + both sides of the
         # pair self-join) — persist it once instead of re-scanning and
         # re-assigning the live fold per consumer
-        assigned = _assign_cells(live, cents).persist()
+        assigned = _assign_cells(live, cents).select("__cell", "__iid", "__iv").persist()
         try:
-            new = assigned.select(
-                "__cell", F.col("__iid").alias("id_b"), F.col("__iv").alias("__vb")
-            )
-            olds = assigned.select(
-                "__cell", F.col("__iid").alias("id_a"), F.col("__iv").alias("__va")
-            )
-            pairs = (
-                olds.join(new, "__cell")
-                .where(F.col("id_a") != F.col("id_b"))
-                .select(
-                    F.least("id_a", "id_b").alias("id_a"),
-                    F.greatest("id_a", "id_b").alias("id_b"),
-                    F.round(dot(F.col("__va"), F.col("__vb")), 6).alias("cosine"),
-                )
-                .where(F.col("cosine") >= threshold)
-                .dropDuplicates(["id_a", "id_b"])
-            )
             cents.write.mode("overwrite").parquet(f"{tmp}/centroids")
-            assigned.select("__cell", "__iid", "__iv").write.mode("overwrite").parquet(
-                f"{tmp}/members"
+            assigned.write.mode("overwrite").parquet(f"{tmp}/members")
+            _semantic_cell_pairs(assigned, assigned, threshold).write.mode("overwrite").parquet(
+                f"{tmp}/pairs"
             )
-            pairs.write.mode("overwrite").parquet(f"{tmp}/pairs")
         finally:
             assigned.unpersist()
 
@@ -2882,7 +2826,8 @@ def lsh_index_stream(
     Unlike IVF there is no trained model at all — the hyperplanes are a
     pure hash family, so the sink has NO drift trade: stream-built and
     one-shot indexes are IDENTICAL row sets (parity-tested bit-for-bit
-    against ``lsh_topk(kernel="arrow")``).
+    against ``lsh_topk``, whose search tail ``lsh_search_from_index``
+    shares).
 
     Idempotency is the strong kind: bucket rows are a pure function of
     the vector, so the dedup-fold absorbs the SAME vector re-delivered
@@ -2916,39 +2861,20 @@ def lsh_search_from_index(
     n_tables: int = 8,
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Probe the streaming-built LSH index with ``lsh_topk``'s exact
-    search tail: bucket the queries with the same kernel, join on the
-    bucket key, dedup candidate pairs across tables, exact-cosine rescore
-    (Arrow einsum), per-query top-k. Same hash-family params as the sink
-    or you are probing a different index."""
+    """Probe the streaming-built LSH index through ``lsh_topk``'s search
+    tail (``knn._lsh_search``): bucket the queries with the same kernel,
+    join on the bucket key, dedup candidate pairs across tables,
+    exact-cosine rescore (Arrow einsum), per-query top-k. Same hash-family
+    params as the sink or you are probing a different index."""
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
-        _bucket_rows_arrow,
-        _pair_dot_arrow,
+        _lsh_search,
+        _require_positive,
     )
-    from real_time_recommendation_system_with_feature_store_spark.operators.topk import topk_per_key
 
+    _require_positive("lsh_search_from_index", k=k)
     it = _live_rows(spark, index_dir, index_dir, ("__iid", "__bucket"))
-    q = _bucket_rows_arrow(queries, query_id, query_vec, "__qid", dim, n_planes, n_tables)
-    cand = (
-        q.join(it, "__bucket")
-        .where(F.col("__qid") != F.col("__iid") if exclude_self else F.lit(True))
-        .select("__qid", "__iid", q["__v"].alias("__qv"), it["__v"].alias("__iv"))
-        .dropDuplicates(["__qid", "__iid"])
-    )
-    scored = _pair_dot_arrow(
-        cand.select(
-            F.col("__qid").alias(query_id),
-            F.col("__iid").alias(item_id),
-            "__qv",
-            "__iv",
-        ),
-        query_id,
-        item_id,
-        "__qv",
-        "__iv",
-    )
-    return topk_per_key(
-        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
+    return _lsh_search(
+        it, queries, query_id, query_vec, item_id, dim, k, n_planes, n_tables, exclude_self
     )
 
 
@@ -2990,14 +2916,7 @@ def pq_index_stream(
         raise ValueError(
             "pq_index_stream: no active SparkSession to persist the codebooks"
         )
-    rows = [
-        (m, c, [float(x) for x in cw[c]])
-        for m, cw in enumerate(books)
-        for c in range(len(cw))
-    ]
-    spark.createDataFrame(
-        rows, "m int, code int, codeword array<double>"
-    ).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
+    _write_pq_codebooks(spark, books, f"{index_dir}/codebooks")
 
     def _codes(batch_df: DataFrame) -> DataFrame:
         src = batch_df.where(
@@ -3008,9 +2927,24 @@ def pq_index_stream(
     return _epoch_sink(f"{index_dir}/codes", _codes)
 
 
+def _write_pq_codebooks(spark: SparkSession, books, path: str) -> None:
+    """Persist a codebook list as ``(m int, code int, codeword
+    array<double>)`` rows — the one writer of the layout
+    ``load_pq_codebooks`` reads (the sink's frozen model and the retrain's
+    staged one)."""
+    rows = [
+        (m, c, [float(x) for x in cw[c]])
+        for m, cw in enumerate(books)
+        for c in range(len(cw))
+    ]
+    spark.createDataFrame(
+        rows, "m int, code int, codeword array<double>"
+    ).write.mode("overwrite").parquet(path)
+
+
 def load_pq_codebooks(spark: SparkSession, index_dir: str):
     """Reload the persisted codebooks as the numpy list the knn kernels
-    take — round-trips ``pq_index_stream``'s layout exactly."""
+    take — round-trips ``_write_pq_codebooks``'s layout exactly."""
     import numpy as np
 
     rows = (
@@ -3039,39 +2973,24 @@ def pq_search_from_index(
     n_codes: int = 16,
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Probe the streaming-built PQ index with ``pq_topk``'s exact ADC
-    tail (rerank=0 semantics — the raw ADC ranking; exact re-ranking
-    needs the original vectors, which the code index deliberately does
-    not store): per-query lookup tables built distributed against the
-    reloaded codebooks, n_sub codegen'd element_at lookups per item, no
-    vectors on the scan side. Same n_sub/n_codes as the sink or you are
-    probing a different index."""
+    """Probe the streaming-built PQ index through ``pq_topk``'s ADC tail
+    (``knn._pq_adc_topk``; rerank=0 semantics — the raw ADC ranking;
+    exact re-ranking needs the original vectors, which the code index
+    deliberately does not store): per-query lookup tables built
+    distributed against the reloaded codebooks, n_sub codegen'd
+    element_at lookups per item, no vectors on the scan side. Same
+    n_sub/n_codes as the sink or you are probing a different index."""
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
-        _pq_adc_score_expr,
+        _pq_adc_topk,
         _pq_query_tables,
+        _require_positive,
     )
-    from real_time_recommendation_system_with_feature_store_spark.operators.topk import topk_per_key
 
+    _require_positive("pq_search_from_index", k=k)
     books = load_pq_codebooks(spark, index_dir)
     encoded = _live_rows(spark, index_dir, f"{index_dir}/codes")
     qtab = _pq_query_tables(queries, query_id, query_vec, books, dim, n_sub)
-    qdt = qtab.select("__qid", "__dt")
-    score = _pq_adc_score_expr(n_sub, n_codes)
-    # query-table broadcast gated on the query projection — the batch
-    # pq_topk's q_small gate mirrored (ADC tables are n_sub·n_codes
-    # doubles per query; a bulk query set can outgrow the budget)
-    from real_time_recommendation_system_with_feature_store_spark.plans.inspect import gated_broadcast
-
-    cand = encoded.crossJoin(
-        gated_broadcast(qdt, gate_df=queries.select(query_id, query_vec))
-    )
-    if exclude_self:
-        cand = cand.where(F.col("__qid") != F.col("__iid"))
-    scored = cand.select(
-        F.col("__qid").alias(query_id),
-        F.col("__iid").alias(item_id),
-        F.round(score, 6).alias("score"),
-    )
-    return topk_per_key(
-        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
+    return _pq_adc_topk(
+        encoded, qtab, queries.select(query_id, query_vec),
+        query_id, item_id, n_sub, n_codes, k, exclude_self,
     )

@@ -261,11 +261,13 @@ def test_arrow_knn_gates_oversized_query_side(spark):
     """The arrow kernels collect the query side driver-side — a 'small side'
     contract. An oversized query frame must route to the distributed
     expression plan (no toPandas at build time, no Python stage in the plan)
-    instead of a silent driver OOM."""
+    instead of a silent driver OOM. PQ builds its query tables distributed,
+    so there the oversized side must only lose the ADC join's broadcast."""
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
         brute_force_topk,
         cosine_near_dup_pairs,
         ivf_topk,
+        pq_topk,
     )
 
     vec = F.array(*[F.lit(0.5), F.lit(0.25), F.lit(0.125), F.lit(1.0)])
@@ -286,6 +288,25 @@ def test_arrow_knn_gates_oversized_query_side(spark):
         huge.select(F.col("qid").alias("vec_id"), "embedding"), "vec_id", threshold=0.9
     )
     assert "MapInPandas" not in nd._jdf.queryExecution().executedPlan().toString()
+
+    # rerank=0: no query-table snapshot, so construction stays lazy; the
+    # query tables feed the ADC join, but no BroadcastExchange holds them
+    pq = pq_topk(huge, items, "qid", "iid", dim=4, k=2, n_sub=2, n_codes=2, rerank=0)
+    lines = pq._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert any("query_tables" in line for line in lines)
+
+    def node_col(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            col = node_col(line)
+            subtree = []
+            for child in lines[i + 1 :]:
+                if node_col(child) <= col:
+                    break
+                subtree.append(child)
+            assert not any("query_tables" in c or "2000000000" in c for c in subtree)
 
 
 def test_minhash_band_join_rows_are_slim(spark):

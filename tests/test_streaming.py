@@ -1749,6 +1749,27 @@ def test_streaming_index_read_side_guards(spark):
         bm25_score_from_index(spark, "/nonexistent", ["a", "a"])
     with pytest.raises(ValueError, match="must be positive"):
         ivf_search_from_index(spark, "/nonexistent", None, "q", k=0)
+    # the batch operators and the other index searches share the check,
+    # which runs before anything is read (None queries never get touched)
+    from real_time_recommendation_system_with_feature_store_spark.operators.knn import (
+        ivf_topk,
+        lsh_topk,
+        pq_topk,
+    )
+    from real_time_recommendation_system_with_feature_store_spark.streaming.pipeline import (
+        lsh_search_from_index,
+        pq_search_from_index,
+    )
+
+    for call in (
+        lambda: ivf_topk(None, None, "q", "i", n_probe=0),
+        lambda: lsh_topk(None, None, "q", "i", 8, k=0),
+        lambda: pq_topk(None, None, "q", "i", 8, k=-1),
+        lambda: lsh_search_from_index(spark, "/nonexistent", None, "q", "v", 8, k=0),
+        lambda: pq_search_from_index(spark, "/nonexistent", None, "q", "v", 8, k=0),
+    ):
+        with pytest.raises(ValueError, match="must be positive"):
+            call()
 
     # purging an index that has no tombstones fails loudly instead of
     # compacting for nothing and crashing on the missing deletes dir
@@ -2253,7 +2274,7 @@ def test_transition_state_stream_track_meta_off(spark):
 def test_lsh_index_stream_matches_batch(spark):
     """Streaming LSH maintenance: the hash family has no trained model,
     so a stream-built index is IDENTICAL to the one-shot batch bucketing
-    — lsh_search_from_index must equal lsh_topk(kernel='arrow') with the
+    — lsh_search_from_index must equal lsh_topk with the
     same params, bit-for-bit, plus the usual redelivery / epoch-replay
     invariance."""
     from real_time_recommendation_system_with_feature_store_spark.operators.knn import lsh_topk
@@ -2288,7 +2309,7 @@ def test_lsh_index_stream_matches_batch(spark):
     batch = sorted(
         map(tuple, lsh_topk(
             queries.withColumnRenamed("vec_id", "qid"), emb, "qid", "vec_id",
-            dim, k=4, n_planes=4, n_tables=4, kernel="arrow",
+            dim, k=4, n_planes=4, n_tables=4,
         ).select(
             F.col("qid").alias("vec_id"),
             F.col("vec_id").alias("nn"), "score", "rank",
